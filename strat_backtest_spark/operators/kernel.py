@@ -2,9 +2,24 @@
 
 Everything else in the engine is declarative DataFrame algebra; this
 module is the one genuinely path-dependent component — cash balance,
-FIFO order book, stop-loss heap, and the strategy decision loop — and
-it runs per (ticker, run_id) group inside a ``mapInPandas`` batch
-walker (see ``run_kernel`` for why not ``applyInPandas``). State is O(open orders) per group; groups are independent, so the
+FIFO order book, stop-loss heap, and the strategy decision rules.
+
+Each reference strategy's decision rule is written once, as an
+incremental step ``step(engine, state, day, close, action)`` over one
+bar (:func:`ma_cross_rule`, :func:`band_rule`). The rule's memory
+between bars is the named :class:`StrategyState`, so the step does not
+care whether the bars arrive as one complete series or as a stream:
+
+- batch: :func:`run_kernel` walks each (ticker, run_id) group inside a
+  ``mapInPandas`` batch walker (see ``run_kernel`` for why not
+  ``applyInPandas``) and :func:`run_rule` feeds the step the group's
+  decision bars — for MA-cross only the cross edges, so the batch cost
+  is O(edges), not O(bars);
+- streaming: ``streaming/backtest_stream.py`` calls the same step once
+  per bar of each micro-batch and persists the engine and the
+  ``StrategyState`` between batches.
+
+State is O(open orders) per group; groups are independent, so the
 kernel parallelizes across tickers × parameter points on a cluster
 (the two axes the reference cannot exploit: its grid search is
 effectively serial, optimize.py:221-225).
@@ -16,7 +31,7 @@ documented fixes on.
 
 Reference citations: _Order strats.py:24-97, Order_Manager
 strats.py:133-245, Strategy.buy/sell strats.py:343-420,
-MA-cross driver custom_strats.py:41-62, band driver
+MA-cross rule custom_strats.py:41-62, band rule
 custom_strats.py:83-101.
 """
 
@@ -24,6 +39,8 @@ from __future__ import annotations
 
 import heapq
 from collections import deque
+from dataclasses import dataclass
+from functools import partial
 from typing import Callable, Iterable
 
 import numpy as np
@@ -245,96 +262,91 @@ class TradingEngine:
 
 
 # ---------------------------------------------------------------------------
-# strategy decision drivers — the imperative residue of each Strategy
-# subclass; signal GENERATION stays vectorized in operators/signals.py.
+# strategy decision rules — the imperative residue of each Strategy
+# subclass, written once as an incremental step. The batch walker below
+# and the streaming operator (streaming/backtest_stream.py) both call
+# the same step; signal GENERATION stays vectorized in
+# operators/signals.py.
 # ---------------------------------------------------------------------------
 
-def ma_cross_driver(
-    eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
-    actions: np.ndarray, params: dict,
-) -> None:
+@dataclass(slots=True)
+class StrategyState:
+    """What a decision rule carries from one bar to the next. Named so
+    the streaming operator can persist it field by field."""
+
+    first_buy_day: object = None  # MA-cross: day of the first buy signal
+    anchor_close: float | None = None  # band: close of the last transaction
+    last_move_sell: bool = False  # band: the last transaction was a sell
+
+
+# step(engine, state, day, close, action) -> the bar's action label
+Step = Callable[[TradingEngine, StrategyState, object, float, object], object]
+
+
+def ma_cross_rule(stop_loss_pct: float | None = None, sell_shares: float = -1) -> Step:
     """Reference custom_strats.py:41-62: buy at every up-cross; sell at
-    down-crosses strictly after the first buy. Drivers take plain
-    numpy views (not per-group pandas frames): a grid sweep runs tens
-    of thousands of groups and per-group pandas masking was a
-    measurable slice of the sweep."""
-    mask = (actions == "buy") | (actions == "sell")
-    idxs = np.flatnonzero(mask)
-    if idxs.size == 0:
-        return
-    acts = actions[idxs]
-    buy_pos = np.flatnonzero(acts == "buy")
-    if buy_pos.size == 0:
-        return
-    first_buy = dates[idxs[buy_pos[0]]]
-    slpct = params.get("stop_loss_pct")
-    for i in idxs:
-        if actions[i] == "buy":
-            close = closes[i]
-            eng.buy(dates[i], close, stop_loss=(close * slpct) if slpct else None)
-        elif dates[i] > first_buy:
-            eng.sell(dates[i], closes[i])
+    down-crosses strictly after the first buy. ``sell_shares`` closes a
+    fixed share count per sell instead of popping whole orders — the
+    engine's partial-fill path, Q1's remainder double-queue
+    (strats.py:151,205) and Q4's num_shares overwrite on fill
+    (strats.py:81), which ``sell(-1)`` never reaches."""
+
+    def step(eng, st, day, close, action):
+        if action == "buy":
+            eng.buy(day, close, stop_loss=(close * stop_loss_pct) if stop_loss_pct else None)
+            if st.first_buy_day is None:
+                st.first_buy_day = day
+        elif action == "sell" and st.first_buy_day is not None and day > st.first_buy_day:
+            eng.sell(day, close, num_shares=sell_shares)
+        return action
+
+    return step
 
 
-def band_driver(
-    eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
-    actions: np.ndarray, params: dict,
-) -> None:
-    """Reference Ten_Percent_Strat (custom_strats.py:83-101): thresholds
-    anchored to the bar of the LAST transaction — fully path-dependent,
-    the canonical proof the kernel API generalizes."""
-    sell_mult = params.get("sell", 1.05)
-    buy_mult = params.get("buy", 0.99)
-    if len(closes) == 0:
-        return
-    anchor = 0
-    last_move_sell = False
-    eng.buy(dates[0], closes[0])
-    for i in range(1, len(closes)):
-        value = closes[i]
-        if value >= closes[anchor] * sell_mult and not last_move_sell:
-            eng.sell(dates[i], value)
-            anchor = i
-            last_move_sell = True
-        elif value <= closes[anchor] * buy_mult and last_move_sell:
-            eng.buy(dates[i], value)
-            anchor = i
-            last_move_sell = False
+def band_rule(sell: float = 1.05, buy: float = 0.99) -> Step:
+    """Reference Ten_Percent_Strat (custom_strats.py:83-101): buy on the
+    first bar, then sell at ``anchor * sell`` and re-buy at
+    ``anchor * buy``, the anchor re-pinning to every transaction bar
+    even when the engine call no-ops — fully path-dependent. Ignores
+    the incoming action; returns the transaction it made."""
+
+    def step(eng, st, day, close, action):
+        if st.anchor_close is None:
+            eng.buy(day, close)
+            st.anchor_close = close
+            return "buy"
+        if not st.last_move_sell and close >= st.anchor_close * sell:
+            eng.sell(day, close)
+            st.anchor_close, st.last_move_sell = close, True
+            return "sell"
+        if st.last_move_sell and close <= st.anchor_close * buy:
+            eng.buy(day, close)
+            st.anchor_close, st.last_move_sell = close, False
+            return "buy"
+        return None
+
+    return step
 
 
-def ma_cross_partial_driver(
-    eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
-    actions: np.ndarray, params: dict,
-) -> None:
-    """ma_cross variant selling a FIXED share count per down-cross
-    (``sell_shares``): exercises the engine's partial-fill path — Q1's
-    remainder double-queue (strats.py:151,205) and Q4's
-    num_shares-overwrite-on-fill (strats.py:81) — which whole-order
-    ``sell(-1)`` closes never reach. No shipped reference strategy
-    issues partial closes; this driver exists so the partial path has
-    end-to-end batch/streaming parity coverage."""
-    shares = params.get("sell_shares", 1.0)
-    mask = (actions == "buy") | (actions == "sell")
-    idxs = np.flatnonzero(mask)
-    if idxs.size == 0:
-        return
-    acts = actions[idxs]
-    buy_pos = np.flatnonzero(acts == "buy")
-    if buy_pos.size == 0:
-        return
-    first_buy = dates[idxs[buy_pos[0]]]
-    for i in idxs:
-        if actions[i] == "buy":
-            eng.buy(dates[i], closes[i])
-        elif dates[i] > first_buy:
-            eng.sell(dates[i], closes[i], num_shares=shares)
-
-
-DRIVERS: dict[str, Callable[..., None]] = {
-    "ma_cross": ma_cross_driver,
-    "ma_cross_partial": ma_cross_partial_driver,
-    "band": band_driver,
+RULES: dict[str, Callable[..., Step]] = {
+    "ma_cross": ma_cross_rule,
+    "ma_cross_partial": partial(ma_cross_rule, sell_shares=1.0),
+    "band": band_rule,
 }
+
+
+def run_rule(
+    eng: TradingEngine, step: Step, dates: np.ndarray, closes: np.ndarray,
+    actions: np.ndarray,
+) -> None:
+    """Run ``step`` over one group's decision bars: those whose feed
+    action is set (MA-cross feeds mark only cross edges, the band feed
+    marks every bar). Inputs are plain numpy views, not per-group
+    pandas frames: a grid sweep runs tens of thousands of groups and
+    per-group pandas masking was a measurable slice of the sweep."""
+    st = StrategyState()
+    for i in np.flatnonzero(pd.notna(actions)):
+        step(eng, st, dates[i], closes[i], actions[i])
 
 
 # ---------------------------------------------------------------------------
@@ -410,13 +422,13 @@ class _KernelOutAcc:
 def _run_one_group(
     acc: _KernelOutAcc, ticker, run_id,
     dates: np.ndarray, closes: np.ndarray, actions: np.ndarray,
-    driver, initial_amount: float, params: dict, parity: bool,
+    step: Step, initial_amount: float, parity: bool,
 ) -> None:
     """Simulate one (ticker, run_id) group into the accumulator.
     Inputs are numpy views over the batch arrays, already date-sorted
     (the feed sort guarantees it) — no per-group pandas objects."""
     eng = TradingEngine(dates, closes, initial_amount, parity=parity)
-    driver(eng, dates, closes, actions, params)
+    run_rule(eng, step, dates, closes, actions)
     for o in eng.book.completed:
         acc.add_order(ticker, run_id, o)
     for o in eng.book.open_orders:
@@ -446,9 +458,10 @@ def run_kernel(
     """Run the order-matching simulation per (ticker, run_id) group.
 
     ``feed``: (ticker, run_id, date, close, action) — all bars for the
-    group, with ``action`` null on non-event bars (the stop-loss scan
-    and path-dependent drivers need the full series; Catalyst prunes
-    the unused columns from the scan).
+    group, with ``action`` null on bars that are not decision points
+    (the stop-loss scan needs the full series; Catalyst prunes the
+    unused columns from the scan). ``strategy`` names a rule in
+    :data:`RULES`; ``params`` are its keyword arguments.
 
     Plan shape: repartition on (ticker, run_id) + sortWithinPartitions
     + ``mapInPandas`` with a batch-spanning group walker — NOT
@@ -474,8 +487,7 @@ def run_kernel(
     Returns the tagged kernel output (KERNEL_OUT_SCHEMA); split with
     :func:`split_kernel_output`.
     """
-    driver = DRIVERS[strategy]
-    params = params or {}
+    step = RULES[strategy](**(params or {}))
 
     srt = (
         feed.select("ticker", "run_id", "date", "close", "action")
@@ -497,7 +509,7 @@ def run_kernel(
                 c = np.concatenate([x[1] for x in segs])
                 a = np.concatenate([x[2] for x in segs])
             _run_one_group(acc, key[0], key[1], d, c, a,
-                           driver, initial_amount, params, parity)
+                           step, initial_amount, parity)
 
         for pdf in batches:
             if len(pdf) == 0:

@@ -45,8 +45,8 @@ class MACrossStrategy:
     def __post_init__(self) -> None:
         if self.sell_shares is not None:
             if self.stop_loss_pct is not None:
-                # ma_cross_partial_driver does not run the stop scan;
-                # silently ignoring the stop would be worse
+                # neither the partial-close oracle nor the update-mode
+                # stream models stops; an unchecked mix would be worse
                 raise NotImplementedError(
                     "stop_loss_pct with sell_shares is not supported"
                 )

@@ -20,7 +20,7 @@ def _ma_kernel_sim_sql(
 ) -> str:
     """DuckDB oracle for the SEQUENTIAL order kernel: a recursive CTE
     folds each (ticker, run_id) group's signal-edge stream through the
-    exact TradingEngine recurrence (operators/kernel.py:166-244,
+    exact TradingEngine recurrence (operators/kernel.py,
     reference strats.py:252-420), carrying the FIFO order book as a
     LIST<STRUCT(s, p)> deque plus scalar state (buying power with the
     Q2 re-add mutation, completed-profit total, share counters, the
@@ -29,7 +29,7 @@ def _ma_kernel_sim_sql(
     FP parity is by construction, not by rounding slack: every
     arithmetic step mirrors the Python kernel's operation ORDER —
     ``ca + (ptot - Σopen)`` keeps order_worth's parenthesization
-    (kernel.py:184-186), share counts replicate CPython's float
+    (TradingEngine._curr_amnt), share counts replicate CPython's float
     floordiv via mod + the >0.5 correction (DuckDB ``mod``/``%`` are C
     fmod; DuckDB ``fmod()`` is a DIFFERENT, lower-precision routine —
     10000.0 fmod 0.16 returns 0 where C fmod gives 0.1599…, flipping
@@ -84,8 +84,8 @@ def _ma_kernel_sim_sql(
       FROM crossed
       WHERE prev_cross IS NULL OR is_cross <> prev_cross
     ), edges AS MATERIALIZED (
-      -- ma_cross_driver: sells at or before the first buy are skipped
-      -- (kernel.py:266-276); survivors are the kernel's decision stream
+      -- ma_cross_rule: sells at or before the first buy are skipped;
+      -- survivors are the kernel's decision stream
       SELECT ticker, run_id, date, close, action,
              row_number() OVER (PARTITION BY ticker, run_id ORDER BY date) AS i
       FROM (
@@ -176,8 +176,8 @@ def _curve_sim_sql(strategy: str) -> str:
     the curve itself. State additionally carries the emitted action and
     (band) the anchor/last-move trigger pair; the curve row at bar i is
     ``((tsh·close − cb) + cs) + init``, the same scalar accumulation
-    order the streaming fn uses (streaming/backtest_stream.py:380-382,
-    511-513). Band trigger semantics: reference Ten_Percent_Strat
+    order the streaming emit loop uses (backtest_stream._make_stream_fn).
+    Band trigger semantics: reference Ten_Percent_Strat
     (custom_strats.py:83-101) — thresholds anchored to the LAST
     transaction bar, anchor moving even when the engine op no-ops."""
     if strategy == "ma_cross":
@@ -624,8 +624,8 @@ FROM m
 
 
 def _partial_sim_sql() -> str:
-    """q71's oracle: the ma_cross_partial driver (fixed 2-share sells,
-    kernel.py:305-330) with the engine's FULL partial-fill quirk set —
+    """q71's oracle: MA-cross with fixed 2-share sells
+    (``ma_cross_rule(sell_shares=2.0)``) with the engine's FULL partial-fill quirk set —
     the recursion carries an oid-indexed order TABLE plus the deque and
     completed lists as oid references, so Q1's remainder double-queue
     (the same remainder object queued twice, strats.py:151,205) and
@@ -803,7 +803,7 @@ def _stoploss_sim_sql() -> str:
     kept-sorted list, whose pop order equals heapq's) WITHOUT advancing
     the edge cursor; a popped stop whose first-match range scan over
     the key's full bar series (np.searchsorted window semantics,
-    kernel.py:188-205) finds no close <= stop is DISCARDED and ends the
+    TradingEngine._exit_stop_loss) finds no close <= stop is DISCARDED and ends the
     flush. A fired stop sells FIFO-front at the PAST bar's (date,
     price), so event-dict writes can land on earlier dates and
     overwrite — events carry a write sequence and the final per-date

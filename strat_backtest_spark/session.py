@@ -14,16 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def get_spark(app_name: str = "strat_backtest_spark", cpus: str | int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
     On a real cluster the ``master`` and memory settings come from
     spark-submit; everything else here is cluster-appropriate as-is.
+    ``cpus`` defaults to ``SPARK_GRAFT_CPUS`` as set at call time, else 32.
     """
-    cpus = str(cpus or DEFAULT_CPUS)
+    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -1,66 +1,72 @@
-"""Streaming port of the FIFO order kernel (SURVEY.md §7.2 M9).
+"""Streaming port of the order kernel (SURVEY.md §7.2 M9).
 
 The reference runs its order engine (strats.py:133-245) as an eager
-batch loop over a complete bar series. This module runs the SAME
-engine incrementally over an unbounded bar stream with
-``applyInPandasWithState``: per (ticker, run_id) the state carries the
-open-order FIFO book plus the moving-average warm-up tail, so each
-micro-batch resumes the simulation exactly where the previous one
-stopped. Emissions are per-bar net-worth rows identical to the batch
-``build_portfolio`` curve (operators/portfolio.py) — verified
-bit-exact in tests/test_streaming_kernel.py against a multi-batch
-replay.
+batch loop over a complete bar series. This module runs the SAME engine
+and the SAME strategy step as the batch kernel (operators/kernel.py:
+``ma_cross_rule``, ``band_rule``) incrementally over an unbounded bar
+stream with ``applyInPandasWithState``. Every entry point — the
+MA-cross and band curves, the partial-close update-mode curve and the
+concurrent grid — runs one stateful function, :func:`_make_stream_fn`.
+Per key, each micro-batch:
+
+1. restores the engine (cash, book, stop heap) and the rule's
+   ``StrategyState`` from the key's state record, by field name;
+2. admits the batch's bars in date order (see the reorder buffer
+   below);
+3. derives MA-cross signals from the carried MA tail (the edge
+   detector; band has no signal layer);
+4. runs the step once per bar and emits one net-worth row per bar,
+   identical to the batch ``build_portfolio`` curve
+   (operators/portfolio.py) — verified bit-exact in
+   tests/test_streaming_kernel.py against multi-batch replays;
+5. saves the state record.
+
+The record is one named definition, :class:`_StreamState`, which also
+generates the Spark state schema. ``GroupState.get`` returns a bare
+tuple, so the names are ours: the record is read and written only by
+field name.
 
 Design notes (100 TB framing):
 - State is O(open orders) + O(lagging) doubles per key — bounded and
   small, the property that lets the query run forever. The MA tail is
   ``max(fast, lagging) - 1`` closes; the book is arrays of the open
-  orders' scalar fields.
+  orders' scalar fields; dates are day ordinals.
 - Signals and order matching live in ONE stateful operator instead of
   two chained ones: Structured Streaming restricts stateful-operator
-  chaining, and the MA tail the signal layer needs is tiny next to
-  the book state anyway.
-- Out-of-order arrival is handled by a bounded REORDER BUFFER in
-  state (ma_cross path): bars wait until the event-time frontier
-  (max day seen − ``allowed_lateness_days``) passes them, so a late
-  bar within the lateness bound still enters the simulation in date
-  order; a null-close row acts as a Flink-style punctuation that
-  advances the frontier (flushing the buffer on a finite replay).
-  With the default lateness 0 every bar is consumed immediately
-  (in-order arrival, the replay drains' case). Late beyond the bound
-  = dropped-on-the-floor semantics, the standard watermark contract.
-- Stop-loss orders ARE supported (ma_cross path): the reference's
-  stop scan (strats.py:302-326) walks the close series between order
-  start and the current bar, so the state additionally carries that
-  close-history window — pruned every batch to the earliest LIVE stop
-  entry's start day, i.e. O(bars an open stop can look back over),
-  not O(stream length). A stop hit books its sell at the PAST hit
-  bar exactly like the batch engine; rows already emitted are not
-  revised (append mode), so intermediate curve rows are as-of
-  processing time while FINAL net worth/shares match the batch kernel
-  exactly.
-
-Per-bar buy/sell shares are read at emission time. That is safe for
-the shipped drivers because both always close with ``num_shares=-1``
-(whole-order FIFO pop), so an order's ``num_shares`` never mutates
-after its bar is emitted — the reference's Q4 post-hoc overwrite can
-only trigger via partial closes, which no shipped strategy issues.
-Partial-close strategies ARE supported via
-``streaming_backtest_curve_update``: UPDATE output mode, where a
-partial fill that overwrites an already-emitted buy bar's shares
-re-emits the corrected history rows (tagged with a monotonically
-increasing ``emit_seq``; latest per (ticker, run_id, date) wins —
-``drain_stream_update`` resolves it). State additionally carries the
-emitted-row cache for the mutable window — bars at/after the earliest
-OPEN order's start day, the only region a future fill can rewrite —
-so state stays O(open-position look-back), not O(stream length).
+  chaining, and the MA tail the signal layer needs is tiny next to the
+  book state anyway.
+- What only some parameters need stays empty otherwise; no option
+  selects it:
+  - stop-loss (``stop_loss_pct``): the reference's stop scan
+    (strats.py:302-326) walks the closes between order start and the
+    current bar, so the record carries the stop heap, that close
+    history, and sell bookings a later hit could still overwrite — all
+    pruned to the earliest live stop's start day. A stop hit books its
+    sell at the PAST hit bar like the batch engine; rows already
+    emitted are not revised (append mode), so intermediate rows are
+    as-of processing time while FINAL net worth and shares match the
+    batch kernel exactly.
+  - out-of-order arrival (``allowed_lateness_days`` > 0): a bounded
+    REORDER BUFFER holds bars until the event-time frontier (max day
+    seen − lateness) passes them, so a late bar within the bound still
+    enters the simulation in date order. A null-close row is a
+    Flink-style punctuation that advances the frontier (flushing the
+    buffer on a finite replay). A bar at or before the last simulated
+    day is dropped — the standard watermark contract.
+  - partial closes (``sell_shares``, update mode): a fill can
+    overwrite an already-emitted buy bar's shares (Q4), so the record
+    keeps the emitted rows such a fill can rewrite — bars at/after the
+    earliest OPEN order's start day — and a rewrite re-emits them with
+    a higher ``emit_seq``; the latest per (ticker, run_id, date) wins
+    (``drain_stream_update`` resolves it).
 """
 
 from __future__ import annotations
 
 import datetime
-from collections import deque
-from typing import Iterator, Tuple
+import heapq
+from dataclasses import asdict, fields
+from typing import Callable, Iterator, NamedTuple, Tuple, get_args, get_origin, get_type_hints
 
 import numpy as np
 import pandas as pd
@@ -69,16 +75,24 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
+    DataType,
     DateType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from strat_backtest_spark.operators.kernel import TradingEngine, _KOrder
+from strat_backtest_spark.operators.kernel import (
+    Step,
+    StrategyState,
+    TradingEngine,
+    _KOrder,
+    band_rule,
+    ma_cross_rule,
+)
 
 _CURVE_OUTPUT = StructType(
     [
@@ -92,332 +106,365 @@ _CURVE_OUTPUT = StructType(
     ]
 )
 
-# Everything the simulation needs to resume: MA warm-up tail, edge
-# detector, and the order book flattened to parallel arrays (a struct
-# of scalars + arrays is what GroupState can hold).
-_KERNEL_STATE = StructType(
-    [
-        StructField("n_seen", LongType()),
-        StructField("ma_tail", ArrayType(DoubleType())),
-        StructField("prev_cross", IntegerType()),  # -1 none, 0 False, 1 True
-        StructField("first_buy_day", LongType()),  # ordinal; -1 = none yet
-        StructField("current_amount", DoubleType()),
-        StructField("profit_base", DoubleType()),
-        StructField("active_orders", DoubleType()),
-        StructField("total_shares", DoubleType()),
-        StructField("next_id", LongType()),
-        StructField("open_oid", ArrayType(LongType())),
-        StructField("open_shares", ArrayType(DoubleType())),
-        StructField("open_start_day", ArrayType(LongType())),
-        StructField("open_start_amount", ArrayType(DoubleType())),
-        StructField("cum_buy_cost", DoubleType()),
-        StructField("cum_sell_proceeds", DoubleType()),
-        # stop-loss extension (empty arrays when unused): pending stop
-        # heap entries, the close-history window the reference's range
-        # scan needs (strats.py:302-326), and sell bookings that a
-        # future stop hit could still OVERWRITE (the reference keys
-        # sells by date and replaces, so a later stop booking the same
-        # date supersedes). All three prune to the earliest live stop
-        # entry's start day — state is O(bars an open stop can look
-        # back over), the honest cost of the look-back semantics, not
-        # O(stream length).
-        StructField("heap_sl", ArrayType(DoubleType())),
-        StructField("heap_oid", ArrayType(LongType())),
-        StructField("heap_start_day", ArrayType(LongType())),
-        StructField("hist_day", ArrayType(LongType())),
-        StructField("hist_close", ArrayType(DoubleType())),
-        StructField("acc_day", ArrayType(LongType())),
-        StructField("acc_shares", ArrayType(DoubleType())),
-        StructField("acc_close", ArrayType(DoubleType())),
-        # out-of-order extension (empty/-1 when lateness_days=0): the
-        # reorder buffer — bars newer than (max event day seen −
-        # allowed lateness) wait here until the watermark frontier
-        # passes them, so cross-batch late arrivals slot back into
-        # date order before the simulation consumes them. State is
-        # O(bars inside the lateness window) per key.
-        StructField("pend_day", ArrayType(LongType())),
-        StructField("pend_close", ArrayType(DoubleType())),
-        StructField("max_day", LongType()),
-        # last day the simulation CONSUMED: a bar at or before it
-        # arrived later than the lateness bound allows and is dropped
-        # on the floor (true watermark-drop) — appending it would make
-        # the history unsorted and corrupt the stop-scan searchsorted
-        # and the rolling-MA tail.
-        StructField("last_day", LongType()),
-    ]
+_CURVE_OUTPUT_U = StructType(
+    list(_CURVE_OUTPUT.fields) + [StructField("emit_seq", LongType())]
 )
 
 
-def _restore_engine(state_row, initial_amount: float) -> TradingEngine:
-    """Rebuild a TradingEngine mid-simulation from the state struct
-    (positions 4..12 — shared by the MA-cross and band layouts).
-    Dates are raw day ORDINALS throughout: the engine only compares,
-    searchsorts, and dict-keys them, so ints work everywhere a
-    datetime would, serialize smaller, and make the stop-scan history
-    a plain int array.
+class _StreamState(NamedTuple):
+    """One key's state between micro-batches. The defaults are a key's
+    state before its first bar, except ``current_amount``, which the
+    operator seeds with the initial capital. Array defaults are empty
+    tuples because NamedTuple defaults are shared; saved records hold
+    plain Python lists and scalars (the state pickles to JVM rows,
+    whose unpickler knows no numpy types)."""
+
+    # the decision rule's kernel.StrategyState
+    first_buy_day: int | None = None
+    anchor_close: float | None = None
+    last_move_sell: bool = False
+    # MA-cross edge detector: the last max(fast, lagging) - 1 closes and
+    # the previous bar's cross flag
+    ma_tail: list[float] = ()
+    prev_cross: bool | None = None
+    # engine: cash, book, open orders
+    current_amount: float = 0.0
+    profit_base: float = 0.0  # completed orders' profit, folded at save
+    active_orders: float = 0.0
+    total_shares: float = 0.0
+    next_id: int = 0
+    open_oid: list[int] = ()
+    open_shares: list[float] = ()
+    open_start_day: list[int] = ()
+    open_start_amount: list[float] = ()
+    # a Q1 double-queued remainder can sit in the open deque already
+    # FILLED (its first copy was popped and filled); value() then reads
+    # end_amount, so the fill survives the handoff
+    filled_oid: list[int] = ()
+    filled_end_day: list[int] = ()
+    filled_end_amount: list[float] = ()
+    # stop-loss: pending heap entries and the close history their range
+    # scan reads
+    heap_sl: list[float] = ()
+    heap_oid: list[int] = ()
+    heap_start_day: list[int] = ()
+    hist_day: list[int] = ()
+    hist_close: list[float] = ()
+    # curve accounting; sold_* are sell bookings a stop hit can still
+    # overwrite (the reference keys sells by date and replaces)
+    cum_buy_cost: float = 0.0
+    cum_sell_proceeds: float = 0.0
+    sold_day: list[int] = ()
+    sold_shares: list[float] = ()
+    sold_close: list[float] = ()
+    # reorder buffer; day ordinal 0 precedes every date
+    pend_day: list[int] = ()
+    pend_close: list[float] = ()
+    max_day: int = 0
+    last_day: int = 0  # last day the simulation consumed
+    # update mode: buy bars whose order a partial fill can still
+    # overwrite (Q4), and the emitted rows such a fill re-emits
+    bought_day: list[int] = ()
+    bought_oid: list[int] = ()
+    bought_shares: list[float] = ()
+    bought_price: list[float] = ()
+    row_day: list[int] = ()
+    row_close: list[float] = ()
+    row_action: list[str] = ()
+    row_shares: list[float] = ()
+    row_net: list[float] = ()
+    emit_seq: int = 0
+
+
+_SPARK_TYPES = {int: LongType(), float: DoubleType(), bool: BooleanType(), str: StringType()}
+
+
+def _spark_type(hint) -> DataType:
+    """``X | None`` is X (every field is nullable); ``list[X]`` is an
+    array of X."""
+    if get_origin(hint) is list:
+        return ArrayType(_SPARK_TYPES[get_args(hint)[0]])
+    return _SPARK_TYPES[next((a for a in get_args(hint) if a is not type(None)), hint)]
+
+
+_STATE_SCHEMA = StructType(
+    [StructField(n, _spark_type(t)) for n, t in get_type_hints(_StreamState).items()]
+)
+
+
+def _restore_engine(s: _StreamState) -> tuple[TradingEngine, dict[int, float]]:
+    """Rebuild a mid-simulation TradingEngine from the record. Dates are
+    day ORDINALS throughout: the engine only compares, searchsorts and
+    dict-keys them, so ints work everywhere a date would and serialize
+    smaller.
 
     A repeated oid restores as the SAME object: Q1's partial-close
     remainder is queued twice (strats.py:151,205) and its quirk
-    semantics depend on both deque slots aliasing one order — two
-    fresh objects would fill independently."""
-    eng = TradingEngine(
-        np.array([], dtype=np.int64), np.array([], dtype=np.float64), initial_amount
-    )
-    if state_row is None:
-        return eng
-    current_amount, profit_base, active_orders, total_shares, next_id = state_row[4:9]
-    oids, shares, start_days, start_amts = state_row[9:13]
-    eng.current_amount = current_amount
-    eng.active_orders = active_orders
+    semantics depend on both deque slots aliasing one order. Stop heap
+    entries may cite completed orders (the scan reads their start day);
+    those get a minimal stand-in.
+
+    Also returns {oid: folded profit} for the open orders restored
+    FILLED: the value their pre-boundary completed entry was folded into
+    profit_base with (see :func:`_refold_profit`)."""
+    eng = TradingEngine(np.empty(0, np.int64), np.empty(0), s.current_amount)
+    eng.active_orders = s.active_orders
     book = eng.book
-    book.profit_base = profit_base
-    book.total_shares = total_shares
-    book._next_id = next_id
-    book.open_orders = deque()
-    for oid, ns, sd, sa in zip(oids, shares, start_days, start_amts):
-        o = book.by_id.get(oid)
-        if o is None:
-            o = _KOrder(oid, ns, int(sd), sa)
-            book.by_id[oid] = o
-        book.open_orders.append(o)
-    return eng
+    book.profit_base, book.total_shares, book._next_id = (
+        s.profit_base, s.total_shares, s.next_id
+    )
+    for oid, ns, sd, sa in zip(s.open_oid, s.open_shares, s.open_start_day, s.open_start_amount):
+        if oid not in book.by_id:
+            book.by_id[oid] = _KOrder(oid, ns, sd, sa)
+        book.open_orders.append(book.by_id[oid])
+    folded = {}
+    for oid, ed, ea in zip(s.filled_oid, s.filled_end_day, s.filled_end_amount):
+        o = book.by_id[oid]
+        o.filled, o.end_time, o.end_amount = True, ed, ea
+        folded[oid] = (ea - o.start_amount) * o.num_shares
+    for sl, oid, sd in zip(s.heap_sl, s.heap_oid, s.heap_start_day):
+        if oid not in book.by_id:
+            book.by_id[oid] = _KOrder(oid, 0.0, sd, 0.0)
+        heapq.heappush(eng.stop_heap, (sl, oid))
+    return eng, folded
 
 
-def _save_engine(eng: TradingEngine) -> tuple:
-    """Flatten the live engine back to state-struct fields (book part
-    only; the caller prepends the signal-layer fields). Completed
-    orders fold their profit into profit_base and are dropped — the
-    stream never re-reads them."""
+def _save_engine(eng: TradingEngine) -> dict:
+    """The engine's record fields. Completed orders fold their profit
+    into profit_base and are dropped — the stream never re-reads them."""
     book = eng.book
-    profit_base = book.profit_base + sum(
-        o.profit_loss() or 0.0 for o in book.completed
-    )
     opens = list(book.open_orders)
-    return (
-        float(eng.current_amount),
-        float(profit_base),
-        float(eng.active_orders),
-        float(book.total_shares),
-        int(book._next_id),
-        [int(o.oid) for o in opens],
-        [float(o.num_shares) for o in opens],
-        [int(o.start_time) for o in opens],
-        [float(o.start_amount) for o in opens],
+    filled = list({o.oid: o for o in opens if o.filled}.values())
+    return dict(
+        current_amount=float(eng.current_amount),
+        profit_base=float(
+            book.profit_base + sum(o.profit_loss() or 0.0 for o in book.completed)
+        ),
+        active_orders=float(eng.active_orders),
+        total_shares=float(book.total_shares),
+        next_id=int(book._next_id),
+        open_oid=[int(o.oid) for o in opens],
+        open_shares=[float(o.num_shares) for o in opens],
+        open_start_day=[int(o.start_time) for o in opens],
+        open_start_amount=[float(o.start_amount) for o in opens],
+        filled_oid=[int(o.oid) for o in filled],
+        filled_end_day=[int(o.end_time) for o in filled],
+        filled_end_amount=[float(o.end_amount) for o in filled],
+        heap_sl=[float(sl) for sl, _ in eng.stop_heap],
+        heap_oid=[int(oid) for _, oid in eng.stop_heap],
+        heap_start_day=[int(book.by_id[oid].start_time) for _, oid in eng.stop_heap],
     )
 
 
-def _make_kernel_fn(
+def _refold_profit(eng: TradingEngine, order, folded: dict) -> None:
+    """Q2 retro re-valuation. The batch engine's order_worth re-reads
+    every completed entry at its CURRENT values on every call, so when a
+    restored-filled order re-fills at a new price, its pre-boundary
+    completed entry re-values too. profit_base froze the old value;
+    replace it with the re-fill's, or buying power silently drifts from
+    the batch engine's. Idempotent: the oid is popped on first use."""
+    old = folded.pop(order.oid, None)
+    if old is not None:
+        eng.book.profit_base += (order.profit_loss() or 0.0) - old
+
+
+def _admit(pdf: pd.DataFrame, s: _StreamState, lateness_days: int):
+    """This batch's bars to simulate, in date order: buffered and fresh
+    bars at or before the event-time frontier (max day seen − allowed
+    lateness). A null close is a punctuation: it advances the frontier
+    but is not a bar. A fresh bar at or before the last consumed day
+    arrived beyond the bound and is dropped — simulating it after newer
+    bars would unsort the history the stop scan searchsorts and the MA
+    tail. Returns (days, closes, held bars, max_day, last_day)."""
+    b_days = [d.toordinal() for d in pdf["date"]]
+    b_closes = pdf["close"].to_numpy(dtype=np.float64)
+    max_day = max([s.max_day, *b_days])
+    frontier = max_day - lateness_days
+    combined = sorted(
+        list(zip(s.pend_day, s.pend_close))
+        + [
+            (dy, float(cl))
+            for dy, cl in zip(b_days, b_closes)
+            if not np.isnan(cl) and dy > s.last_day
+        ]
+    )
+    ready = [b for b in combined if b[0] <= frontier]
+    held = [b for b in combined if b[0] > frontier]
+    days = [dy for dy, _ in ready]
+    closes = [cl for _, cl in ready]
+    return days, closes, held, max_day, (days[-1] if days else s.last_day)
+
+
+def _ma_edges(tail: list, prev_cross, closes: list, fast: int, lagging: int):
+    """MA-cross signals for this batch's bars with ma_cross_signals
+    semantics: every change of the cross flag is an edge, the key's
+    first bar and a leading sell included. ``tail`` holds the last
+    max(fast, lagging) - 1 closes, so pandas rolling over (tail + batch)
+    equals rolling over the full history for every batch row — the
+    null-until-n warm-up included, because while the key has seen fewer
+    bars the tail IS the full history. Returns (signals, new tail, last
+    cross flag)."""
+    series = pd.Series(np.concatenate([np.asarray(tail, dtype=np.float64), closes]))
+    ma_f = series.rolling(fast).mean().to_numpy()
+    ma_l = series.rolling(lagging).mean().to_numpy()
+    signals = []
+    for c in (ma_f > ma_l)[len(tail):].tolist():  # NaN warm-up compares False
+        signals.append(None if c == prev_cross else ("buy" if c else "sell"))
+        prev_cross = c
+    tail_len = max(fast, lagging) - 1
+    new_tail = series.to_numpy()[-tail_len:].tolist() if tail_len > 0 else []
+    return signals, new_tail, prev_cross
+
+
+def _make_stream_fn(
+    step: Step,
+    resolve: Callable[[Tuple], tuple],
     initial_amount: float,
-    stop_loss_pct: float | None = None,
-    resolve=None,
     lateness_days: int = 0,
+    rewrites: bool = False,
 ):
-    """Build the applyInPandasWithState function for MA-cross. The MA
-    tail length is max(fast, lagging)-1, enough that pandas rolling
-    over (tail + batch) equals rolling over the full history for every
-    batch row — including pandas' null-until-n warm-up, because while
-    the key has seen < tail_len bars the tail IS the full history.
+    """The applyInPandasWithState function behind every entry point.
 
-    With ``stop_loss_pct`` the state additionally carries the stop
-    heap, the close history its range scan reads, and sell bookings a
-    future hit could overwrite (all pruned to the earliest live stop's
-    start day). A stop hit books the sell at the PAST hit bar, exactly
-    like the batch engine; already-emitted curve rows are not revised
-    (append mode), so intermediate rows are as-of processing time —
-    FINAL net worth and shares match the batch kernel exactly, which
-    is what the parity tests pin.
-
-    ``resolve(key) -> (fast, lagging, run_id)`` maps the group key to
-    its parameter point — a constant for the single-run operator, a
-    dict lookup on key[1] for the streaming grid (one stateful
-    operator, every (ticker, run_id) its own independent simulation
-    state)."""
+    ``resolve(key) -> (run_id, windows)`` maps the group key to its run:
+    ``windows`` is (fast, lagging) for MA-cross — a constant for the
+    single-run operators, a lookup on key[1] for the grid, where every
+    (ticker, run_id) is its own simulation — or None for band.
+    ``rewrites`` re-emits the rows a partial fill rewrites (update
+    mode); without it every bar emits exactly once."""
+    init = float(initial_amount)
+    names = (_CURVE_OUTPUT_U if rewrites else _CURVE_OUTPUT).names
 
     def fn(
         key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import heapq
-
-        fast, lagging, run_id = resolve(key)
-        tail_len = max(fast, lagging) - 1
-        row = state.get if state.exists else None
-        if row is None:
-            n_seen, tail, prev_cross, first_buy_day = 0, [], -1, -1
-            cum_buy, cum_sell = 0.0, 0.0
-            heap_entries, hist_day, hist_close = [], [], []
-            accounted: dict[int, tuple[float, float]] = {}
-            pend_day, pend_close, max_day, last_day = [], [], -1, -1
+        run_id, windows = resolve(key)
+        s = _StreamState(*state.get) if state.exists else _StreamState(current_amount=init)
+        eng, folded = _restore_engine(s)
+        st = StrategyState(**{f.name: getattr(s, f.name) for f in fields(StrategyState)})
+        days, closes, held, max_day, last_day = _admit(
+            pd.concat(list(pdf_iter)), s, lateness_days
+        )
+        if windows is None:
+            signals, ma_tail, prev_cross = [None] * len(days), [], None
         else:
-            n_seen, tail, prev_cross, first_buy_day = row[0], list(row[1]), row[2], row[3]
-            cum_buy, cum_sell = row[13], row[14]
-            heap_entries = [
-                (sl, oid, sd) for sl, oid, sd in zip(row[15], row[16], row[17])
-            ]
-            hist_day, hist_close = list(row[18]), list(row[19])
-            accounted = {
-                int(d): (sh, cl) for d, sh, cl in zip(row[20], row[21], row[22])
-            }
-            pend_day, pend_close, max_day = list(row[23]), list(row[24]), row[25]
-            last_day = row[26]
-        eng = _restore_engine(row, initial_amount)
-        # re-arm the stop heap; heap entries may cite completed orders
-        # (the reference keeps them addressable for the scan's
-        # start_time read) — give those a minimal stand-in
-        for sl, oid, sd in heap_entries:
-            if oid not in eng.book.by_id:
-                eng.book.by_id[oid] = _KOrder(oid, 0.0, int(sd), 0.0)
-            heapq.heappush(eng.stop_heap, (sl, oid))
+            signals, ma_tail, prev_cross = _ma_edges(s.ma_tail, s.prev_cross, closes, *windows)
 
-        pdf = pd.concat(list(pdf_iter))
-        b_days = [d.toordinal() for d in pdf["date"]]
-        b_closes = pdf["close"].to_numpy(dtype=np.float64)
-        if b_days:
-            max_day = max(max_day, max(b_days))
-        # Reorder buffer: a bar is consumed only once the event-time
-        # frontier (max day seen − allowed lateness) passes it, so a
-        # late arrival ≤ lateness_days old still slots back into date
-        # order. A null-close row is a PUNCTUATION (Flink-style
-        # watermark-as-record): it advances the frontier — flushing
-        # the buffer on a finite replay — but is not a bar.
-        frontier = max_day - lateness_days
-        # beyond-bound lateness = TRUE drop: a bar at or before the
-        # last consumed day would enter the simulation AFTER newer
-        # bars already simulated — unsorted history silently breaks
-        # the stop-scan searchsorted and the MA tail. Pending bars
-        # were admitted while on time, so only fresh arrivals filter.
-        combined = sorted(
-            [
-                (dy, float(cl))
-                for dy, cl in zip(pend_day, pend_close)
-            ]
-            + [
-                (dy, float(cl))
-                for dy, cl in zip(b_days, b_closes)
-                if not np.isnan(cl) and dy > last_day
-            ]
-        )
-        ready = [(dy, cl) for dy, cl in combined if dy <= frontier]
-        held = [(dy, cl) for dy, cl in combined if dy > frontier]
-        pend_day = [dy for dy, _ in held]
-        pend_close = [cl for _, cl in held]
-        days_new = [dy for dy, _ in ready]
-        closes_new = np.array([cl for _, cl in ready], dtype=np.float64)
-        if days_new:
-            last_day = days_new[-1]
-        dates_new = [datetime.date.fromordinal(dy) for dy in days_new]
+        # the stop scan's series: retained history + this batch
+        all_days = np.concatenate([np.asarray(s.hist_day, np.int64), np.asarray(days, np.int64)])
+        all_closes = np.concatenate([np.asarray(s.hist_close, np.float64), np.asarray(closes, np.float64)])
+        h = len(s.hist_day)
+        cum_buy, cum_sell, emit_seq = s.cum_buy_cost, s.cum_sell_proceeds, s.emit_seq
+        sold = {d: (sh, c) for d, sh, c in zip(s.sold_day, s.sold_shares, s.sold_close)}
+        bought = {
+            d: (o, sh, p)
+            for d, o, sh, p in zip(s.bought_day, s.bought_oid, s.bought_shares, s.bought_price)
+        }
+        rows = [list(r) for r in zip(s.row_day, s.row_close, s.row_action, s.row_shares, s.row_net)]
+        out = {c: [] for c in names}
 
-        concat = pd.Series(np.concatenate([np.asarray(tail, dtype=np.float64), closes_new]))
-        ma_f = concat.rolling(fast).mean().to_numpy()
-        ma_l = concat.rolling(lagging).mean().to_numpy()
-        off = len(tail)
+        def emit(day, close, action, shares, net):
+            nonlocal emit_seq
+            out["ticker"].append(key[0])
+            out["run_id"].append(run_id)
+            out["date"].append(datetime.date.fromordinal(day))
+            out["close"].append(close)
+            out["action"].append(action)
+            out["shares_owned"].append(shares)
+            out["net_worth"].append(net)
+            if rewrites:
+                emit_seq += 1
+                out["emit_seq"].append(emit_seq)
 
-        # the scan series: retained history + this batch, as int/float
-        # arrays; per-bar prefixes are views (no copies)
-        all_days = np.concatenate(
-            [np.asarray(hist_day, dtype=np.int64), np.asarray(days_new, dtype=np.int64)]
-        )
-        all_closes = np.concatenate(
-            [np.asarray(hist_close, dtype=np.float64), closes_new]
-        )
-        h = len(hist_day)
-
-        out = {c: [] for c in _CURVE_OUTPUT.names}
-        for i, (d, day, close) in enumerate(zip(dates_new, days_new, closes_new)):
-            close = float(close)
-            # bars strictly BEFORE this one (the reference's window is
-            # [order start, trading date) — current bar excluded)
-            eng.dates = all_days[: h + i]
-            eng.closes = all_closes[: h + i]
-            f, l = ma_f[off + i], ma_l[off + i]
-            cross = 1 if (not np.isnan(f) and not np.isnan(l) and f > l) else 0
-            changed = prev_cross == -1 or cross != prev_cross
-            prev_cross = cross
-            # `action` is the SIGNAL (ma_cross_signals semantics: every
-            # change row carries one, including a leading sell); the
-            # engine applies ma_cross_driver's rules on top (sell only
-            # strictly after the first buy edge).
-            action = None
-            if changed:
-                if cross:
-                    action = "buy"
-                    eng.buy(
-                        day,
-                        close,
-                        stop_loss=(close * stop_loss_pct) if stop_loss_pct else None,
-                    )
-                    if first_buy_day < 0:
-                        first_buy_day = day
-                else:
-                    action = "sell"
-                    if first_buy_day >= 0 and day > first_buy_day:
-                        eng.sell(day, close)
-            b = eng.buy_orders.get(day)
+        n_done = 0
+        for i, (day, close, signal) in enumerate(zip(days, closes, signals)):
+            # bars strictly BEFORE this one: the reference's scan window
+            # is [order start, trading date)
+            eng.dates, eng.closes = all_days[: h + i], all_closes[: h + i]
+            action = step(eng, st, day, close, signal)
+            b = eng.buy_orders.pop(day, None)
             if b is not None:
                 cum_buy += b.num_shares * close
-            # sells may book at PAST bars (stop hits) or be overwritten
-            # at a date by a later hit — reconcile the whole dict
-            # against what has been accounted (both stay edge-sparse)
+                if rewrites:
+                    bought[day] = (b.oid, float(b.num_shares), float(b.start_amount))
+            # sells may book at PAST bars (stop hits) or re-book a date
+            # a later hit overwrites: reconcile against what is accounted
             for dt, sh in eng.sell_orders.items():
-                dt = int(dt)
-                old = accounted.get(dt)
+                old = sold.get(dt)
                 if old is None:
-                    if dt == day:
-                        c_at = close
-                    else:
-                        c_at = float(all_closes[np.searchsorted(all_days[: h + i], dt)])
-                    accounted[dt] = (float(sh), c_at)
+                    c_at = close if dt == day else float(all_closes[np.searchsorted(eng.dates, dt)])
+                    sold[dt] = (float(sh), c_at)
                     cum_sell += sh * c_at
                 elif old[0] != sh:
                     cum_sell += (sh - old[0]) * old[1]
-                    accounted[dt] = (float(sh), old[1])
-            shares = eng.book.total_shares
-            out["ticker"].append(key[0])
-            out["run_id"].append(run_id)
-            out["date"].append(d)
-            out["close"].append(close)
-            out["action"].append(action)
-            out["shares_owned"].append(float(shares))
-            out["net_worth"].append(
-                shares * close - cum_buy + cum_sell + float(initial_amount)
-            )
+                    sold[dt] = (float(sh), old[1])
+            eng.sell_orders.clear()
+            # Q4: a fill this bar may have overwritten the shares of an
+            # order a PAST bar's buy registered; a filled order never
+            # mutates again, so its entry settles
+            dirty = None
+            for o in eng.book.completed[n_done:]:
+                _refold_profit(eng, o, folded)
+                ent = bought.get(o.start_time)
+                if ent is None or ent[0] != o.oid:
+                    continue
+                del bought[o.start_time]
+                if ent[1] != o.num_shares:
+                    delta = (ent[1] - o.num_shares) * ent[2]
+                    cum_buy -= delta
+                    for r in rows:
+                        if r[0] >= o.start_time:
+                            r[4] += delta
+                    dirty = o.start_time if dirty is None else min(dirty, o.start_time)
+            n_done = len(eng.book.completed)
+            if dirty is not None:
+                for r in rows:
+                    if r[0] >= dirty:
+                        emit(*r)
+            shares = float(eng.book.total_shares)
+            net = shares * close - cum_buy + cum_sell + init
+            emit(day, close, action, shares, net)
+            if rewrites:
+                rows.append([day, close, action, shares, net])
 
-        n_seen += len(closes_new)
-        # plain Python floats: GroupState pickles to JVM rows and
-        # numpy scalars are not registered with the unpickler
-        new_tail = (
-            [float(x) for x in concat.to_numpy()[-tail_len:]] if tail_len > 0 else []
-        )
-        # persist + prune the stop machinery to the earliest live stop
-        heap_out = [
-            (float(sl), int(oid), int(eng.book.by_id[oid].start_time))
-            for sl, oid in eng.stop_heap
-        ]
-        if heap_out:
-            keep_from = min(sd for _, _, sd in heap_out)
+        saved = _save_engine(eng)
+        # prune the stop machinery to the earliest live stop, and the
+        # rewritable rows to the earliest OPEN order's start day
+        keep_from = min(saved["heap_start_day"], default=None)
+        if keep_from is None:
+            hist_day, hist_close, sold = [], [], {}
+        else:
             keep = all_days >= keep_from
-            hd = [int(x) for x in all_days[keep]]
-            hc = [float(x) for x in all_closes[keep]]
-            acc = {dt: v for dt, v in accounted.items() if dt >= keep_from}
-        else:
-            hd, hc, acc = [], [], {}
+            hist_day, hist_close = all_days[keep].tolist(), all_closes[keep].tolist()
+            sold = {dt: v for dt, v in sold.items() if dt >= keep_from}
+        rewritable = min(saved["open_start_day"], default=None)
+        rows = [r for r in rows if rewritable is not None and r[0] >= rewritable]
         state.update(
-            (
-                int(n_seen), new_tail, int(prev_cross), int(first_buy_day),
-            )
-            + _save_engine(eng)
-            + (
-                float(cum_buy), float(cum_sell),
-                [sl for sl, _, _ in heap_out],
-                [oid for _, oid, _ in heap_out],
-                [sd for _, _, sd in heap_out],
-                hd, hc,
-                [int(dt) for dt in acc],
-                [float(v[0]) for v in acc.values()],
-                [float(v[1]) for v in acc.values()],
-                [int(dy) for dy in pend_day],
-                [float(cl) for cl in pend_close],
-                int(max_day),
-                int(last_day),
+            _StreamState(
+                **asdict(st),
+                ma_tail=ma_tail,
+                prev_cross=prev_cross,
+                **saved,
+                hist_day=hist_day,
+                hist_close=hist_close,
+                cum_buy_cost=float(cum_buy),
+                cum_sell_proceeds=float(cum_sell),
+                sold_day=list(sold),
+                sold_shares=[v[0] for v in sold.values()],
+                sold_close=[v[1] for v in sold.values()],
+                pend_day=[dy for dy, _ in held],
+                pend_close=[cl for _, cl in held],
+                max_day=max_day,
+                last_day=last_day,
+                bought_day=list(bought),
+                bought_oid=[int(v[0]) for v in bought.values()],
+                bought_shares=[v[1] for v in bought.values()],
+                bought_price=[v[2] for v in bought.values()],
+                row_day=[r[0] for r in rows],
+                row_close=[r[1] for r in rows],
+                row_action=[r[2] for r in rows],
+                row_shares=[r[3] for r in rows],
+                row_net=[r[4] for r in rows],
+                emit_seq=emit_seq,
             )
         )
         yield pd.DataFrame(out)
@@ -425,101 +472,14 @@ def _make_kernel_fn(
     return fn
 
 
-# Band strategy (reference Ten_Percent_Strat, custom_strats.py:83-101)
-# is fully path-dependent: thresholds anchor to the LAST transaction's
-# close. Its streaming state is just (started, anchor_close,
-# last_move_sell) + the order book — no MA tail at all. The signal
-# fields of _KERNEL_STATE are reused: ma_tail[0] holds anchor_close is
-# NOT done — a separate struct keeps both states self-describing.
-_BAND_STATE = StructType(
-    [
-        StructField("started", IntegerType()),
-        StructField("anchor_close", DoubleType()),
-        StructField("last_move_sell", IntegerType()),
-        StructField("unused_pad", LongType()),
-        StructField("current_amount", DoubleType()),
-        StructField("profit_base", DoubleType()),
-        StructField("active_orders", DoubleType()),
-        StructField("total_shares", DoubleType()),
-        StructField("next_id", LongType()),
-        StructField("open_oid", ArrayType(LongType())),
-        StructField("open_shares", ArrayType(DoubleType())),
-        StructField("open_start_day", ArrayType(LongType())),
-        StructField("open_start_amount", ArrayType(DoubleType())),
-        StructField("cum_buy_cost", DoubleType()),
-        StructField("cum_sell_proceeds", DoubleType()),
-    ]
-)
-
-
-def _make_band_fn(
-    sell_mult: float, buy_mult: float, initial_amount: float, run_id: int
-):
-    """applyInPandasWithState function for the band strategy: buy on
-    the key's FIRST bar ever, then sell when close rises to
-    anchor*sell_mult, re-buy when it falls to anchor*buy_mult, the
-    anchor re-pinning to each transaction bar (band_driver parity,
-    operators/kernel.py)."""
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        row = state.get if state.exists else None
-        if row is None:
-            started, anchor, last_sell = 0, 0.0, 0
-            cum_buy, cum_sell = 0.0, 0.0
-        else:
-            started, anchor, last_sell = row[0], row[1], row[2]
-            cum_buy, cum_sell = row[13], row[14]
-        eng = _restore_engine(row, initial_amount)
-
-        pdf = pd.concat(list(pdf_iter)).sort_values("date")
-        closes_new = pdf["close"].to_numpy(dtype=np.float64)
-        dates_new = list(pdf["date"])
-
-        out = {c: [] for c in _CURVE_OUTPUT.names}
-        for d, close in zip(dates_new, closes_new):
-            close = float(close)
-            day = d.toordinal()
-            action = None
-            if not started:
-                started = 1
-                anchor = close
-                action = "buy"
-                eng.buy(day, close)
-            elif close >= anchor * sell_mult and not last_sell:
-                action = "sell"
-                eng.sell(day, close)
-                anchor, last_sell = close, 1
-            elif close <= anchor * buy_mult and last_sell:
-                action = "buy"
-                eng.buy(day, close)
-                anchor, last_sell = close, 0
-            b = eng.buy_orders.get(day)
-            if b is not None:
-                cum_buy += b.num_shares * close
-            s = eng.sell_orders.get(day)
-            if s:
-                cum_sell += s * close
-            shares = eng.book.total_shares
-            out["ticker"].append(key[0])
-            out["run_id"].append(run_id)
-            out["date"].append(d)
-            out["close"].append(close)
-            out["action"].append(action)
-            out["shares_owned"].append(float(shares))
-            out["net_worth"].append(
-                shares * close - cum_buy + cum_sell + float(initial_amount)
-            )
-
-        state.update(
-            (int(started), float(anchor), int(last_sell), 0)
-            + _save_engine(eng)
-            + (float(cum_buy), float(cum_sell))
-        )
-        yield pd.DataFrame(out)
-
-    return fn
+def _stateful(grouped, fn, output: StructType, mode: str) -> DataFrame:
+    return grouped.applyInPandasWithState(
+        fn,
+        outputStructType=output,
+        stateStructType=_STATE_SCHEMA,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def streaming_backtest_curve(
@@ -540,274 +500,20 @@ def streaming_backtest_curve(
     or 'band' (sell_mult/buy_mult) — both reference strategies run
     incrementally."""
     if strategy == "ma_cross":
-        fn = _make_kernel_fn(
-            initial_amount,
-            stop_loss_pct,
-            resolve=lambda key: (fast, lagging, run_id),
-            lateness_days=allowed_lateness_days,
-        )
-        st = _KERNEL_STATE
+        step, windows = ma_cross_rule(stop_loss_pct=stop_loss_pct), (fast, lagging)
     elif strategy == "band":
         if stop_loss_pct is not None:
             raise NotImplementedError("band strategy takes no stop-loss")
-        if allowed_lateness_days:
-            raise NotImplementedError("reorder buffer is on the ma_cross path")
-        fn, st = _make_band_fn(sell_mult, buy_mult, initial_amount, run_id), _BAND_STATE
+        step, windows = band_rule(sell=sell_mult, buy=buy_mult), None
     else:
         raise ValueError(f"unknown streaming strategy {strategy!r}")
-    return (
-        bars_stream.select("ticker", "date", "close")
-        .groupBy("ticker")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_CURVE_OUTPUT,
-            stateStructType=st,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    fn = _make_stream_fn(
+        step, lambda key: (run_id, windows), initial_amount, allowed_lateness_days
     )
-
-
-_CURVE_OUTPUT_U = StructType(
-    list(_CURVE_OUTPUT.fields) + [StructField("emit_seq", LongType())]
-)
-
-# Update-mode layout: signal fields + engine book (positions 4..12,
-# shared with _KERNEL_STATE so _restore_engine/_save_engine apply) +
-# net-worth cums + the two mutable-window structures:
-#   accb_*  — per in-window buy day, the order object buy() registered
-#             (Q4 overwrites its num_shares at its first partial fill;
-#             oid lives until that fill settles it)
-#   row_*   — the emitted-row cache a future fill can rewrite: bars
-#             at/after the earliest OPEN order's start day
-_PARTIAL_STATE = StructType(
-    [
-        StructField("n_seen", LongType()),
-        StructField("ma_tail", ArrayType(DoubleType())),
-        StructField("prev_cross", IntegerType()),
-        StructField("first_buy_day", LongType()),
-        StructField("current_amount", DoubleType()),
-        StructField("profit_base", DoubleType()),
-        StructField("active_orders", DoubleType()),
-        StructField("total_shares", DoubleType()),
-        StructField("next_id", LongType()),
-        StructField("open_oid", ArrayType(LongType())),
-        StructField("open_shares", ArrayType(DoubleType())),
-        StructField("open_start_day", ArrayType(LongType())),
-        StructField("open_start_amount", ArrayType(DoubleType())),
-        StructField("cum_buy_cost", DoubleType()),
-        StructField("cum_sell_proceeds", DoubleType()),
-        StructField("accb_day", ArrayType(LongType())),
-        StructField("accb_oid", ArrayType(LongType())),
-        StructField("accb_shares", ArrayType(DoubleType())),
-        StructField("accb_price", ArrayType(DoubleType())),
-        StructField("row_day", ArrayType(LongType())),
-        StructField("row_close", ArrayType(DoubleType())),
-        StructField("row_action", ArrayType(StringType())),
-        StructField("row_shares", ArrayType(DoubleType())),
-        StructField("row_net", ArrayType(DoubleType())),
-        StructField("emit_seq", LongType()),
-        # a Q1 double-queued remainder can sit in the open deque
-        # ALREADY FILLED (its first copy was popped and filled);
-        # value() must then read end_amount, so fill state survives
-        # the handoff (sparse: filled open orders only)
-        StructField("of_oid", ArrayType(LongType())),
-        StructField("of_end_day", ArrayType(LongType())),
-        StructField("of_end_amt", ArrayType(DoubleType())),
-    ]
-)
-
-
-def _restore_filled_open_orders(eng: TradingEngine, of_rows) -> dict:
-    """Re-mark still-queued Q1 remainder copies as FILLED after an
-    engine restore and return {oid: folded_profit} — the value each
-    order's single pre-boundary completed entry was folded into
-    profit_base with at the last save.
-
-    Why the return value matters: the batch engine's order_worth (Q2)
-    re-reads every completed entry at its CURRENT values on every
-    call, so when the still-queued copy later RE-FILLS at a new
-    price, the pre-boundary entry retroactively re-values too. The
-    folded profit_base froze the old value; the delta must be applied
-    at re-fill time (:func:`_refill_profit_correction`) or buying
-    power silently drifts from the batch engine's."""
-    out: dict[int, float] = {}
-    for oid, ed, ea in of_rows:
-        o = eng.book.by_id[int(oid)]
-        o.filled, o.end_time, o.end_amount = True, int(ed), float(ea)
-        out[int(oid)] = (float(ea) - o.start_amount) * o.num_shares
-    return out
-
-
-def _refill_profit_correction(eng: TradingEngine, order, folded: dict) -> None:
-    """Q2 retro re-valuation: when a restored-filled order re-fills,
-    replace its previously folded profit with the re-fill's value
-    (idempotent — the oid is popped on first application)."""
-    old = folded.pop(order.oid, None)
-    if old is not None:
-        eng.book.profit_base += (order.profit_loss() or 0.0) - old
-
-
-def _make_partial_kernel_fn(
-    initial_amount: float, fast: int, lagging: int, run_id: int, sell_shares: float
-):
-    """applyInPandasWithState function for MA-cross with FIXED-size
-    sells (the partial-fill path). Emission contract: every bar emits
-    once when simulated; when a later partial fill overwrites a past
-    buy bar's shares (Q4), every cached row from that bar forward is
-    re-emitted with the corrected net worth and a higher ``emit_seq``
-    — latest seq per date is the curve, and it equals the batch
-    kernel's post-run curve exactly."""
-
-    tail_len = max(fast, lagging) - 1
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        row = state.get if state.exists else None
-        if row is None:
-            n_seen, tail, prev_cross, first_buy_day = 0, [], -1, -1
-            cum_buy, cum_sell = 0.0, 0.0
-            accb: dict[int, list] = {}
-            rows: list[list] = []
-            emit_seq = 0
-        else:
-            n_seen, tail, prev_cross, first_buy_day = row[0], list(row[1]), row[2], row[3]
-            cum_buy, cum_sell = row[13], row[14]
-            accb = {
-                int(d): [int(o), float(s), float(p)]
-                for d, o, s, p in zip(row[15], row[16], row[17], row[18])
-            }
-            rows = [
-                [int(d), float(c), a, float(s), float(n)]
-                for d, c, a, s, n in zip(row[19], row[20], row[21], row[22], row[23])
-            ]
-            emit_seq = row[24]
-        eng = _restore_engine(row, initial_amount)
-        refill_folded: dict[int, float] = {}
-        if row is not None:
-            refill_folded = _restore_filled_open_orders(
-                eng, zip(row[25], row[26], row[27])
-            )
-
-        pdf = pd.concat(list(pdf_iter))
-        pdf = pdf[pdf["close"].notna()].sort_values("date")
-        days_new = [d.toordinal() for d in pdf["date"]]
-        closes_new = pdf["close"].to_numpy(dtype=np.float64)
-
-        concat = pd.Series(
-            np.concatenate([np.asarray(tail, dtype=np.float64), closes_new])
-        )
-        ma_f = concat.rolling(fast).mean().to_numpy()
-        ma_l = concat.rolling(lagging).mean().to_numpy()
-        off = len(tail)
-
-        out = {c: [] for c in _CURVE_OUTPUT_U.names}
-        settled_fills: set[int] = set()
-
-        def emit(day, close, action, shares, net, seq):
-            out["ticker"].append(key[0])
-            out["run_id"].append(run_id)
-            out["date"].append(datetime.date.fromordinal(day))
-            out["close"].append(close)
-            out["action"].append(action)
-            out["shares_owned"].append(shares)
-            out["net_worth"].append(net)
-            out["emit_seq"].append(seq)
-
-        for i, (day, close) in enumerate(zip(days_new, closes_new)):
-            close = float(close)
-            f, l = ma_f[off + i], ma_l[off + i]
-            cross = 1 if (not np.isnan(f) and not np.isnan(l) and f > l) else 0
-            changed = prev_cross == -1 or cross != prev_cross
-            prev_cross = cross
-            action = None
-            if changed:
-                if cross:
-                    action = "buy"
-                    eng.buy(day, close)
-                    if first_buy_day < 0:
-                        first_buy_day = day
-                else:
-                    action = "sell"
-                    if first_buy_day >= 0 and day > first_buy_day:
-                        eng.sell(day, close, num_shares=sell_shares)
-            b = eng.buy_orders.get(day)
-            if b is not None:
-                accb[day] = [int(b.oid), float(b.num_shares), float(b.start_amount)]
-                cum_buy += b.num_shares * b.start_amount
-            s = eng.sell_orders.get(day)
-            if s:
-                cum_sell += s * close
-            # Q4 reconciliation: a fill this bar may have overwritten
-            # the shares of an order a PAST bar's buy event registered
-            dirty = None
-            for o in eng.book.completed:
-                if o.oid in settled_fills:
-                    continue
-                settled_fills.add(o.oid)
-                _refill_profit_correction(eng, o, refill_folded)
-                ent = accb.get(int(o.start_time))
-                if ent is not None and ent[0] == o.oid:
-                    if ent[1] != o.num_shares:
-                        delta = (ent[1] - o.num_shares) * ent[2]
-                        cum_buy -= delta
-                        ent[1] = float(o.num_shares)
-                        d0 = int(o.start_time)
-                        for r in rows:
-                            if r[0] >= d0:
-                                r[4] += delta
-                        dirty = d0 if dirty is None else min(dirty, d0)
-                    ent[0] = -1  # settled: a filled order never mutates again
-            if dirty is not None:
-                for r in rows:
-                    if r[0] >= dirty:
-                        emit_seq += 1
-                        emit(r[0], r[1], r[2], r[3], r[4], emit_seq)
-            shares = eng.book.total_shares
-            net = shares * close - cum_buy + cum_sell + float(initial_amount)
-            emit_seq += 1
-            emit(day, close, action, float(shares), float(net), emit_seq)
-            rows.append([day, close, action, float(shares), float(net)])
-
-        n_seen += len(closes_new)
-        new_tail = (
-            [float(x) for x in concat.to_numpy()[-tail_len:]] if tail_len > 0 else []
-        )
-        # prune the mutable window: only bars at/after the earliest
-        # OPEN order's start day can still be rewritten
-        anchor = min((int(o.start_time) for o in eng.book.open_orders), default=None)
-        if anchor is None:
-            rows = []
-        else:
-            rows = [r for r in rows if r[0] >= anchor]
-        accb = {d: v for d, v in accb.items() if v[0] != -1}
-        filled_opens = list(
-            {o.oid: o for o in eng.book.open_orders if o.filled}.values()
-        )
-        state.update(
-            (int(n_seen), new_tail, int(prev_cross), int(first_buy_day))
-            + _save_engine(eng)
-            + (
-                float(cum_buy), float(cum_sell),
-                [int(d) for d in accb],
-                [int(v[0]) for v in accb.values()],
-                [float(v[1]) for v in accb.values()],
-                [float(v[2]) for v in accb.values()],
-                [int(r[0]) for r in rows],
-                [float(r[1]) for r in rows],
-                [r[2] for r in rows],
-                [float(r[3]) for r in rows],
-                [float(r[4]) for r in rows],
-                int(emit_seq),
-                [int(o.oid) for o in filled_opens],
-                [int(o.end_time) for o in filled_opens],
-                [float(o.end_amount) for o in filled_opens],
-            )
-        )
-        yield pd.DataFrame(out)
-
-    return fn
+    return _stateful(
+        bars_stream.select("ticker", "date", "close").groupBy("ticker"),
+        fn, _CURVE_OUTPUT, "append",
+    )
 
 
 def streaming_backtest_curve_update(
@@ -825,17 +531,15 @@ def streaming_backtest_curve_update(
     ``emit_seq``; resolve with :func:`drain_stream_update` (or any
     latest-per-key consumer). Stop-loss + reorder buffering stay on
     the append-mode operator."""
-    fn = _make_partial_kernel_fn(initial_amount, fast, lagging, run_id, sell_shares)
-    return (
-        bars_stream.select("ticker", "date", "close")
-        .groupBy("ticker")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_CURVE_OUTPUT_U,
-            stateStructType=_PARTIAL_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    fn = _make_stream_fn(
+        ma_cross_rule(sell_shares=sell_shares),
+        lambda key: (run_id, (fast, lagging)),
+        initial_amount,
+        rewrites=True,
+    )
+    return _stateful(
+        bars_stream.select("ticker", "date", "close").groupBy("ticker"),
+        fn, _CURVE_OUTPUT_U, "update",
     )
 
 
@@ -843,24 +547,11 @@ def drain_stream_update(spark: SparkSession, streaming_df: DataFrame) -> DataFra
     """Drain an update-mode curve and resolve re-emissions: the memory
     sink keeps every emission, so the curve is the max-``emit_seq`` row
     per (ticker, run_id, date)."""
-    import uuid
-
     from pyspark.sql import Window
 
-    name = f"bt_stream_u_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_df.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     w = Window.partitionBy("ticker", "run_id", "date").orderBy(F.col("emit_seq").desc())
     return (
-        spark.table(name)
+        _drain_memory(spark, streaming_df, "update")
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "emit_seq")
@@ -884,27 +575,20 @@ def streaming_grid_curve(
     warm and current as bars arrive.
 
     ``params``: iterable of (run_id, fast, lagging)."""
-    rows = [(int(r), int(f), int(l)) for r, f, l in params]
-    by_run = {r: (f, l) for r, f, l in rows}
+    by_run = {int(r): (int(f), int(l)) for r, f, l in params}
     expanded = bars_stream.select(
         "ticker",
         "date",
         "close",
         F.explode(F.array(*[F.lit(r).cast("long") for r in by_run])).alias("run_id"),
     )
-    fn = _make_kernel_fn(
+    fn = _make_stream_fn(
+        ma_cross_rule(stop_loss_pct=stop_loss_pct),
+        lambda key: (int(key[1]), by_run[int(key[1])]),
         initial_amount,
-        stop_loss_pct,
-        resolve=lambda key: (*by_run[int(key[1])], int(key[1])),
-        lateness_days=allowed_lateness_days,
+        allowed_lateness_days,
     )
-    return expanded.groupBy("ticker", "run_id").applyInPandasWithState(
-        fn,
-        outputStructType=_CURVE_OUTPUT,
-        stateStructType=_KERNEL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _stateful(expanded.groupBy("ticker", "run_id"), fn, _CURVE_OUTPUT, "append")
 
 
 def bars_replay_stream(
@@ -1020,11 +704,15 @@ def drain_stream(spark: SparkSession, streaming_df: DataFrame) -> DataFrame:
     """Start → processAllAvailable → stop; return the memory table.
     The memory sink is the local drain for gate checks; production
     uses a durable parquet/kafka sink with the same plan."""
+    return _drain_memory(spark, streaming_df, "append")
+
+
+def _drain_memory(spark: SparkSession, streaming_df: DataFrame, mode: str) -> DataFrame:
     import uuid
 
     name = f"bt_stream_{uuid.uuid4().hex[:8]}"
     q = (
-        streaming_df.writeStream.outputMode("append")
+        streaming_df.writeStream.outputMode(mode)
         .format("memory")
         .queryName(name)
         .start()
@@ -1040,11 +728,9 @@ def streaming_signal_edges_stateful(
     bars_stream: DataFrame, fast: int, lagging: int, run_id: int = 0
 ) -> DataFrame:
     """Signal edges only, with true incremental history: the same
-    stateful walk as the kernel but emitting cross edges. This is the
-    exact-under-incremental-arrival answer to the foreachBatch
-    bridge's full-history caveat (events_stream.streaming_signal_edges)
-    — the state's MA tail supplies the ``lagging-1`` bars of history a
-    fresh micro-batch lacks. A simulation still runs underneath (cheap:
+    stateful walk as the kernel but emitting cross edges, exact under
+    incremental arrival — the state's MA tail supplies the
+    ``lagging-1`` bars of history a fresh micro-batch lacks. A simulation still runs underneath (cheap:
     one engine call per edge); output is filtered to edge rows."""
     curve = streaming_backtest_curve(bars_stream, fast, lagging, 1.0, run_id)
     return curve.filter(F.col("action").isNotNull()).select(

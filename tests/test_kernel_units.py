@@ -10,8 +10,9 @@ import pandas as pd
 
 from strat_backtest_spark.operators.kernel import (
     TradingEngine,
-    band_driver,
-    ma_cross_driver,
+    band_rule,
+    ma_cross_rule,
+    run_rule,
 )
 
 
@@ -92,7 +93,7 @@ def test_ma_cross_driver_skips_sell_before_first_buy():
     closes = np.array([10.0, 10.0, 10.0, 10.0])
     actions = np.array(["sell", "buy", None, "sell"], dtype=object)
     eng = TradingEngine(d, closes, 100.0)
-    ma_cross_driver(eng, d, closes, actions, {})
+    run_rule(eng, ma_cross_rule(), d, closes, actions)
     # leading sell ignored; buy at d1; sell at d3
     assert len(eng.book.completed) == 1
     assert eng.book.completed[0].start_time == d[1]
@@ -104,7 +105,7 @@ def test_band_driver_alternates():
     closes = np.array([100.0, 106.0, 104.0, 98.0, 110.0])
     actions = np.array(["bar"] * 5, dtype=object)
     eng = TradingEngine(d, closes, 1000.0)
-    band_driver(eng, d, closes, actions, {"sell": 1.05, "buy": 0.99})
+    run_rule(eng, band_rule(sell=1.05, buy=0.99), d, closes, actions)
     # buy@100 (d0) → sell@106 ≥ 100·1.05 (d1) → buy@104 ≤ 106·0.99 (d2)
     # → sell@110 ≥ 104·1.05 (d4); book ends flat
     assert [o.end_amount for o in eng.book.completed] == [106.0, 110.0]

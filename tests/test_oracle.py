@@ -70,12 +70,18 @@ _FAST_SUBSET = [
     "q42_backtest_metrics",   # metrics + Q6 attach
     "q46_simulated_annealing",
     "q47_embedding_neardup",
+    "q49_stream_signal_edges",  # streaming kernel: MA-tail edge detector
     "q53_resample_ohlc",
     "q55_curation_pipeline",
     "q56_dedup_components",
     "q58_simhash_neardup",
+    "q59_stream_backtest_kernel",  # streaming kernel: MA-cross curve
+    "q64_stream_band_kernel",      # streaming kernel: band curve
+    "q65_stream_grid",             # streaming kernel: (ticker, run_id) grid
     "q66_chunking",
+    "q71_stream_partial_close",    # streaming kernel: update-mode re-emission
     "q72_stoploss_networth",
+    "q73_stream_late_arrival",     # streaming kernel: reorder buffer
     "q79_pack_sequences",
     "q86_ngram_topk",
     "q94_image_neardup",

@@ -550,25 +550,42 @@ def test_streaming_partial_close_update_mode(spark, tmp_path):
         assert r["shares_owned"] == pytest.approx(want_shares, rel=1e-12)
 
 
-def test_partial_close_refill_across_boundary_state_parity():
-    """A Q1 double-queued remainder whose two fills land in DIFFERENT
-    micro-batches: the batch engine's order_worth (Q2) re-values the
-    pre-boundary completed entry at the re-fill's prices on every
-    later call, so the streamed engine must correct its folded
-    profit_base by the same delta — otherwise buying power silently
-    drifts (measured 17-25 on this series before the fix). Pure
-    engine-level harness of the save/restore/correct helpers the
-    stateful fn uses; no Spark session needed."""
-    import numpy as np
-    import pandas as pd
+class _MemState:
+    """Spark-free GroupState stand-in. ``get`` returns a bare tuple,
+    like pyspark's; ``update`` checks the record against the Spark state
+    schema and round-trips it through pickle, as crossing to the JVM
+    does."""
 
-    from strat_backtest_spark.operators.kernel import TradingEngine
-    from strat_backtest_spark.streaming.backtest_stream import (
-        _refill_profit_correction,
-        _restore_engine,
-        _restore_filled_open_orders,
-        _save_engine,
-    )
+    def __init__(self):
+        self._blob = None
+
+    @property
+    def exists(self):
+        return self._blob is not None
+
+    @property
+    def get(self):
+        import pickle
+
+        return tuple(pickle.loads(self._blob))
+
+    def update(self, value):
+        import pickle
+
+        from pyspark.sql.types import _make_type_verifier
+
+        from strat_backtest_spark.streaming.backtest_stream import _STATE_SCHEMA
+
+        value = tuple(value)
+        _make_type_verifier(_STATE_SCHEMA)(value)
+        self._blob = pickle.dumps(value)
+
+
+def _zigzag_days_closes():
+    """Three 6% rises then three 7% falls, ten times: buys of about ten
+    shares, band trades on every leg and — with 3-share sells —
+    remainders that exhaust and re-fill."""
+    import datetime
 
     closes = []
     v = 10.0
@@ -579,53 +596,159 @@ def test_partial_close_refill_across_boundary_state_parity():
         for _ in range(3):
             v *= 0.93
             closes.append(v)
-    closes = np.array(closes)
-    days = np.arange(len(closes), dtype=np.int64)
-    s = pd.Series(closes)
-    f, l = s.rolling(2).mean(), s.rolling(4).mean()
-    actions = []
-    prev = None
-    for i in range(len(closes)):
-        cc = 1 if (not np.isnan(f.iloc[i]) and not np.isnan(l.iloc[i]) and f.iloc[i] > l.iloc[i]) else 0
-        actions.append(("buy" if cc else "sell") if (prev is None or cc != prev) else None)
-        prev = cc
-    init = 100.0  # ~10-share buys, so sell_shares=3 exhausts remainders
+    base = datetime.date(2022, 1, 1)
+    return [base + datetime.timedelta(days=i) for i in range(len(closes))], closes
 
-    def drive(eng, lo, hi, first_buy, folded):
-        settled = set()
-        for i in range(lo, hi):
-            if actions[i] == "buy":
-                eng.buy(int(days[i]), float(closes[i]))
-                first_buy = True
-            elif actions[i] == "sell" and first_buy:
-                eng.sell(int(days[i]), float(closes[i]), num_shares=3.0)
-            for o in eng.book.completed:
-                if o.oid not in settled:
-                    settled.add(o.oid)
-                    _refill_profit_correction(eng, o, folded)
-        return first_buy
 
-    truth = TradingEngine(days, closes, init)
-    drive(truth, 0, len(closes), False, {})
+def _stream_batches(fn, chunks):
+    """Run ``fn`` over micro-batches of (date, close) rows for one key;
+    returns (state, curve rows with the latest emit_seq per date)."""
+    import pandas as pd
 
-    for split in (9, 12, 15, 18, 21, 24, 27):
-        e1 = TradingEngine(days, closes, init)
-        fb = drive(e1, 0, split, False, {})
-        saved = (None,) * 4 + _save_engine(e1)
-        of_rows = [
-            (o.oid, o.end_time, o.end_amount)
-            for o in {o.oid: o for o in e1.book.open_orders if o.filled}.values()
-        ]
-        e2 = _restore_engine(saved, init)
-        folded = _restore_filled_open_orders(e2, of_rows)
-        drive(e2, split, len(closes), fb, folded)
-        assert e2.book.total_shares == truth.book.total_shares, split
-        assert e2.current_amount == pytest.approx(truth.current_amount, abs=1e-9), split
-        assert e2.book.profit_base + sum(
-            o.profit_loss() or 0.0 for o in e2.book.completed
-        ) == pytest.approx(
-            sum(o.profit_loss() or 0.0 for o in truth.book.completed), abs=1e-9
-        ), split
+    state, curve = _MemState(), {}
+    for chunk in chunks:
+        pdf = pd.DataFrame(
+            {"ticker": "z", "date": [d for d, _ in chunk], "close": [c for _, c in chunk]}
+        )
+        for out in fn(("z",), iter([pdf]), state):
+            for r in out.to_dict("records"):
+                curve[r["date"]] = r  # update mode: later emissions win
+    return state, curve
+
+
+@pytest.mark.parametrize("strategy", ["ma_cross_stop", "ma_cross_partial", "band"])
+def test_partial_close_refill_across_boundary_state_parity(strategy):
+    """Split the series into micro-batches at several points — the
+    named state saved, pickled and restored at every boundary — and
+    continue: the result must equal ONE uninterrupted batch-kernel run.
+
+    - ma_cross_stop: the stop heap, its look-back close history and
+      past-dated sell bookings cross the boundary.
+    - ma_cross_partial: a Q1 double-queued remainder whose two fills
+      land in DIFFERENT micro-batches — the batch engine's order_worth
+      (Q2) re-values the pre-boundary completed entry at the re-fill's
+      prices on every later call, so the streamed engine must correct
+      its folded profit_base by the same delta, or buying power
+      silently drifts (measured 17-25 on this series before the fix).
+    - band: the anchor and last-move flags cross the boundary.
+
+    Spark-free: drives the stateful function itself."""
+    import datetime
+
+    import numpy as np
+    import pandas as pd
+
+    from strat_backtest_spark.operators.kernel import (
+        TradingEngine,
+        band_rule,
+        ma_cross_rule,
+        run_rule,
+    )
+    from strat_backtest_spark.streaming.backtest_stream import (
+        _make_stream_fn,
+        _restore_engine,
+        _StreamState,
+    )
+
+    dates, closes = _zigzag_days_closes()
+    init, fast, lagging = 100.0, 2, 4  # ~10-share buys
+    if strategy == "ma_cross_stop":
+        # a seeded walk whose stops hit at bars BEFORE the action that
+        # flushes them, some of them across a split
+        rng = np.random.default_rng(5)
+        closes = (np.abs(10.0 + np.cumsum(rng.normal(0, 0.4, 60))) + 1).tolist()
+        dates = [dates[0] + datetime.timedelta(days=i) for i in range(len(closes))]
+        lagging = 5
+    days = np.array([d.toordinal() for d in dates], dtype=np.int64)
+    closes_a = np.array(closes)
+    if strategy == "band":
+        step, windows, actions = band_rule(), None, np.array(["bar"] * len(closes), dtype=object)
+    else:
+        s = pd.Series(closes_a)
+        cross = (s.rolling(fast).mean() > s.rolling(lagging).mean()).to_numpy()
+        actions = np.array(
+            [("buy" if c else "sell") if i == 0 or c != cross[i - 1] else None
+             for i, c in enumerate(cross)],
+            dtype=object,
+        )
+        step = (
+            ma_cross_rule(stop_loss_pct=0.97) if strategy == "ma_cross_stop"
+            else ma_cross_rule(sell_shares=3.0)
+        )
+        windows = (fast, lagging)
+
+    truth = TradingEngine(days, closes_a, init)
+    run_rule(truth, step, days, closes_a, actions)
+    truth_profit = sum(o.profit_loss() or 0.0 for o in truth.book.completed)
+    truth_net = (
+        truth.book.total_shares * closes[-1]
+        - sum(o.num_shares * o.start_amount for o in truth.buy_orders.values())
+        + sum(sh * closes_a[np.searchsorted(days, d)] for d, sh in truth.sell_orders.items())
+        + init
+    )
+    assert truth.book.completed, "series must trade"
+    if strategy == "ma_cross_stop":
+        decision_days = set(days[pd.notna(actions)])
+        assert any(o.end_time not in decision_days for o in truth.book.completed)
+
+    def make_fn():
+        return _make_stream_fn(
+            step, lambda key: (0, windows), init, rewrites=strategy == "ma_cross_partial"
+        )
+
+    bars = list(zip(dates, closes))
+    _, whole = _stream_batches(make_fn(), [bars])
+    splits = (9, 12, 15, 18, 21, 24, 27)
+    cuts = [[bars[:k], bars[k:]] for k in splits]
+    cuts.append([bars[a:b] for a, b in zip((0, *splits), (*splits, len(bars)))])
+    for chunks in cuts:
+        state, curve = _stream_batches(make_fn(), chunks)
+        e2, _ = _restore_engine(_StreamState(*state.get))
+        where = [len(c) for c in chunks]
+        assert e2.book.total_shares == truth.book.total_shares, where
+        assert e2.current_amount == pytest.approx(truth.current_amount, abs=1e-9), where
+        # completed orders are folded into profit_base at every save
+        assert e2.book.profit_base == pytest.approx(truth_profit, abs=1e-9), where
+        last = curve[dates[-1]]
+        assert last["shares_owned"] == truth.book.total_shares, where
+        assert last["net_worth"] == pytest.approx(truth_net, rel=1e-12), where
+        if strategy != "ma_cross_stop":
+            # stop hits book past bars without revising emitted rows,
+            # so only stop-loss finals are split-invariant
+            assert curve == whole, where
+
+
+@pytest.mark.parametrize("strategy", ["ma_cross", "band"])
+def test_stream_reorder_buffer_matches_in_order(strategy):
+    """Spark-free reorder-buffer check on the shared stateful function:
+    two bars delivered one micro-batch late (within the lateness bound),
+    a beyond-bound re-delivery of an early bar, and a null-close
+    punctuation that flushes the buffer give the same curve as in-order
+    arrival in one batch."""
+    import datetime
+
+    from strat_backtest_spark.operators.kernel import band_rule, ma_cross_rule
+    from strat_backtest_spark.streaming.backtest_stream import _make_stream_fn
+
+    dates, closes = _zigzag_days_closes()
+    bars = list(zip(dates, closes))
+    if strategy == "band":
+        step, windows = band_rule(), None
+    else:
+        step, windows = ma_cross_rule(), (2, 4)
+
+    def run(chunks, lateness):
+        fn = _make_stream_fn(step, lambda key: (0, windows), 100.0, lateness)
+        return _stream_batches(fn, chunks)[1]
+
+    punct = [(dates[-1] + datetime.timedelta(days=60), float("nan"))]
+    chunks = [
+        bars[:18] + bars[20:24],
+        bars[18:20] + bars[24:40],
+        [(dates[1], 999.0)] + bars[40:],  # dates[1] is long past the bound
+        punct,
+    ]
+    assert run(chunks, lateness=5) == run([bars], lateness=0)
 
 
 def test_streaming_partial_close_refill_e2e(spark, tmp_path):
@@ -635,7 +758,6 @@ def test_streaming_partial_close_refill_e2e(spark, tmp_path):
     update-mode curve must still equal the batch kernel bit-exactly.
     Complements the engine-level split harness with full-pipeline
     coverage of the re-fill correction."""
-    import datetime
     import pandas as pd
 
     from pyspark.sql import Window as W, functions as F
@@ -646,23 +768,8 @@ def test_streaming_partial_close_refill_e2e(spark, tmp_path):
         streaming_backtest_curve_update,
     )
 
-    base = datetime.date(2022, 1, 1)
-    rows = []
-    v = 10.0
-    for cyc in range(10):
-        for _ in range(3):
-            v *= 1.06
-            rows.append(v)
-        for _ in range(3):
-            v *= 0.93
-            rows.append(v)
-    pdf = pd.DataFrame(
-        {
-            "ticker": "z",
-            "date": [base + datetime.timedelta(days=i) for i in range(len(rows))],
-            "close": rows,
-        }
-    )
+    dates, closes = _zigzag_days_closes()
+    pdf = pd.DataFrame({"ticker": "z", "date": dates, "close": closes})
     bars = spark.createDataFrame(pdf)
     init = 100.0
 
