@@ -80,8 +80,9 @@ def entry(spark: SparkSession) -> DataFrame:
 #     distinct catalog code only (verified r13 by the judge, nothing
 #     it consumes changed).
 #   - late-r14 addition: simhash_neardup_pairs / hash_neardup_pairs
-#     gained the band-saturation fallback (join-based hot-bucket cap
-#     past hot_literal_cap — the r13 watch item) -> q58 (direct)
+#     changed their hot-bucket cap (the r13 watch item; both now call
+#     operators/dedup._banded_pairs, the banded-pair core shared with
+#     lsh_candidate_pairs) -> q58 (direct)
 #     moves INTO the head per rule 1; q94/q95 (hash_neardup_pairs'
 #     consumers) already hold rule-1 seats. q18 (pure catalog.py,
 #     zero diffs for many rounds) vacates to the tail in exchange,

@@ -243,76 +243,104 @@ def minhash_signatures(
     return df.select(id_col, text_col).mapInPandas(_sigs, schema)
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    k: int = 8,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    max_bucket_size: int = 2000,
-    dedup: str = "first_band",
-) -> DataFrame:
-    """LSH banding: docs sharing any band of r = k/bands consecutive
-    signature slots become a candidate pair. Returns (id_a, id_b,
-    est_jaccard) with id_a < id_b, deduplicated across bands.
+# ---------------------------------------------------------------------------
+# banded near-dup pairs: one core for MinHash-LSH and banded Hamming
+# ---------------------------------------------------------------------------
 
-    Plan shape: explode bands → ONE exchange on (band, band_key)
-    that BOTH self-join sides reuse (ReusedExchange — the banding
-    expression is evaluated once, and the join needs no further
-    shuffle) → drop degenerate buckets larger than
-    ``max_bucket_size`` (at 100 TB one hot band_key — boilerplate
-    text, empty docs — is a quadratic bomb; real near-dup groups are
-    orders of magnitude smaller) → pairs within buckets → cross-band
-    dedup.
-
-    ``dedup="first_band"`` (default) is the q58 trick: a pair is kept
-    only in the FIRST band where both band keys match and that bucket
-    survived the cap — a JVM predicate over the signature arrays
-    already in the row, replacing a ``distinct()`` exchange over the
-    full pair stream (the dominant stage at the 5M-doc rung: 48 of
-    ~80 s post-signature). Unlike ``simhash_neardup_pairs`` (whose
-    capped set collects driver-side), the capped-bucket lookup here is
-    a BROADCAST LEFT JOIN per earlier band against the hot-key
-    aggregate, so everything stays in ONE job — a driver collect of
-    the hot set would run the (expensive) signature lineage a second
-    time, which at the 5M rung cost more than the distinct it saved.
-    ``dedup="distinct"`` keeps the old shuffle (parity-tested
-    identical).
-
-    est_jaccard is an UNROLLED k-term coalesce-compare (null slots
-    count unequal, matching the HOF filter's null-drop) — the
-    ``zip_with`` fold ran interpreted and measured 2× slower per pair.
-    """
-    r = k // bands
-    band_structs = F.array(
+def _band_structs(h: Column, key, bands: int, key_name: str) -> Column:
+    """array<struct<band, ``key_name``>> holding ``key(h, band)`` for
+    every band: the one explode shape of every band-row producer."""
+    return F.array(
         *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("_", *[F.col(f"sig_{b * r + j}") for j in range(r)]).alias(
-                    "band_key"
-                ),
-            )
+            F.struct(F.lit(b).alias("band"), key(h, b).alias(key_name))
             for b in range(bands)
         ]
     )
-    sig_arr = F.array(*[F.col(f"sig_{i}") for i in range(k)])
+
+
+def _minhash_band_key(k: int, bands: int):
+    """Band ``b`` of a MinHash signature array: its r = k/bands
+    consecutive slots joined by "_" — the banding convention of the
+    batch pair generator, the persisted dedup index and their
+    oracles."""
+    r = k // bands
+    return lambda sig, b: F.concat_ws(
+        "_", *[sig.getItem(b * r + j) for j in range(r)]
+    )
+
+
+def _minhash_sig_rows(sigs: DataFrame, k: int, id_col: str) -> DataFrame:
+    """(id, h = signature array) rows of the docs that HAVE a
+    signature. Docs with no shingles (null text, empty text, fewer than
+    n tokens) have all-null slots and emit NOTHING: ``concat_ws`` skips
+    nulls, so they would all share the "" key of every band and pair
+    with each other, while SQL string concat yields NULL and never
+    joins."""
+    return sigs.filter(F.col("sig_0").isNotNull()).select(
+        F.col(id_col).alias("id"),
+        F.array(*[F.col(f"sig_{i}") for i in range(k)]).alias("h"),
+    )
+
+
+def _bit_slices(bits: int, bands: int):
+    """Band ``j`` of a ``bits``-bit hash: ``(h >> j*width) & mask``
+    with width = bits // bands — the banding convention of the batch
+    banded-Hamming pairs, the streaming near-dup admission operator
+    and their oracles."""
+    width = bits // bands
+    mask = (1 << width) - 1
+    return lambda h, j: F.shiftright(h, j * width).bitwiseAND(F.lit(mask))
+
+
+def _banded_pairs(
+    rows: DataFrame, key, bands: int, score: Column, max_bucket_size: int
+) -> DataFrame:
+    """Candidate pairs of (id, h) rows that share a band key: returns
+    (id_a, id_b, ``score``) with id_a < id_b, one row per pair, where
+    ``key(h, band)`` is the band key Column and ``score`` an aliased
+    Column over ``h_a``/``h_b``.
+
+    Plan shape: explode bands → ONE exchange on (band, band_key)
+    feeding the bucket-count window, checkpointed once for both
+    self-join sides (the banding expression is evaluated once; the
+    checkpoint scan reports no partitioning, so a sort-merge self-join
+    past the broadcast threshold shuffles it again) → drop degenerate
+    buckets larger than ``max_bucket_size`` (at 100 TB one hot band
+    key — boilerplate text, empty docs — is a quadratic bomb; real
+    near-dup groups are orders of magnitude smaller) → pairs within
+    buckets → cross-band dedup.
+
+    Cross-band dedup is FIRST-SURVIVING-BAND-WINS: a pair is kept only
+    in the first band where both band keys match and that bucket
+    survived the cap — a JVM predicate over the two hashes already in
+    the row, replacing a ``distinct()`` exchange over the full pair
+    stream (the dominant stage at the 5M-doc MinHash rung: 48 of ~80 s
+    post-signature). The capped-bucket lookup is a BROADCAST LEFT JOIN
+    per earlier band against the hot-key aggregate read from the
+    checkpoint: no driver collect of the hot set (it would run the
+    expensive hash lineage a second time, which at the 5M rung cost
+    more than the distinct it saved) and no plan literals, so a hot
+    set of any size takes the same plan."""
     exploded = (
-        sigs.select(
-            F.col(id_col), sig_arr.alias("sig"), F.explode(band_structs).alias("bk")
+        rows.select(
+            "id",
+            "h",
+            F.explode(_band_structs(F.col("h"), key, bands, "band_key")).alias("bk"),
         )
-        .select(id_col, "sig", "bk.band", "bk.band_key")
+        .select("id", "h", "bk.band", "bk.band_key")
         .repartition("band", "band_key")
     )
     bucket = Window.partitionBy("band", "band_key")
-    # ONE materialization of the signature→band→shuffle→bucket-count
+    # ONE materialization of the hash→band→shuffle→bucket-count
     # lineage. Exchange reuse does NOT fire across consumers here —
-    # plans containing PythonUDF (the Arrow signature stage) fail
-    # exchange-reuse canonicalization, and this subtree has FIVE
-    # consumers (both self-join sides, the hot set, and each hot
-    # broadcast); measured at the 5M-doc rung the un-checkpointed plan
-    # ran the signature stage five times. The lazy localCheckpoint
-    # stores the window-partitioned rows once, PRESERVING the
-    # (band, band_key) hash partitioning, so the self-join below adds
-    # no further shuffle.
+    # plans containing PythonUDF (the Arrow signature/simhash/decode
+    # stages) fail exchange-reuse canonicalization, and this subtree
+    # has several consumers (both self-join sides, the hot set, and
+    # each hot broadcast); measured at the 5M-doc MinHash rung the
+    # un-checkpointed plan ran the signature stage five times. The
+    # lazy localCheckpoint stores the window-partitioned rows once
+    # (under AQE, building it already runs the shuffle stage below
+    # it; the window and the store run with the first action).
     # DISK_ONLY: this is a bulk intermediate (docs × bands rows). The
     # default MEMORY_AND_DISK level competed with the downstream
     # join/CC stages for heap at the 5M-doc rung (GCLocker retry
@@ -322,27 +350,63 @@ def lsh_candidate_pairs(
         exploded.withColumn("__bucket_n", F.count(F.lit(1)).over(bucket))
         .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
-    exploded = ann.filter(F.col("__bucket_n") <= max_bucket_size)
+    kept = ann.filter(F.col("__bucket_n") <= max_bucket_size)
 
     # capped (band, band_key) keys — tiny, read from the checkpoint
     hot = (
         ann.filter(F.col("__bucket_n") > max_bucket_size)
-        .select(F.concat_ws("|", "band", "band_key").alias("__hot_tag"))
+        .select(F.struct("band", "band_key").alias("__hot_tag"))
         .distinct()
     )
 
-    a = exploded.select(
-        F.col("band"), F.col("band_key"),
-        F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"),
-    )
-    b = exploded.select(
-        F.col("band"), F.col("band_key"),
-        F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"),
-    )
+    a = kept.select("band", "band_key", F.col("id").alias("id_a"), F.col("h").alias("h_a"))
+    b = kept.select("band", "band_key", F.col("id").alias("id_b"), F.col("h").alias("h_b"))
+    joined = a.join(b, ["band", "band_key"]).filter(F.col("id_a") < F.col("id_b"))
+
+    # Band keys of EARLIER bands rebuild from the two hashes with the
+    # same key expression the join used, so the match test is exact. A
+    # bucket that was CAPPED in an earlier band emitted nothing there,
+    # so a match in it must not suppress this row — the broadcast
+    # left-join flags (__hot_<b>) encode exactly that. Only bands
+    # 0..bands-2 need flags: the chain stops at the row's own band.
+    h_a, h_b = F.col("h_a"), F.col("h_b")
+    for bnd in range(bands - 1):
+        hb = hot.select(F.col("__hot_tag").alias(f"__hot_{bnd}"))
+        tag = F.struct(F.lit(bnd).alias("band"), key(h_a, bnd).alias("band_key"))
+        joined = joined.join(F.broadcast(hb), tag == F.col(f"__hot_{bnd}"), "left")
+
+    chain = None
+    for bnd in range(bands):
+        m = key(h_a, bnd) == key(h_b, bnd)
+        if bnd < bands - 1:
+            m = m & F.col(f"__hot_{bnd}").isNull()
+        chain = F.when(m, F.lit(bnd)) if chain is None else chain.when(m, F.lit(bnd))
+    return joined.filter(chain == F.col("band")).select("id_a", "id_b", score)
+
+
+def lsh_candidate_pairs(
+    sigs: DataFrame,
+    k: int = 8,
+    bands: int = 4,
+    id_col: str = "doc_id",
+    max_bucket_size: int = 2000,
+) -> DataFrame:
+    """LSH banding: docs sharing any band of r = k/bands consecutive
+    signature slots become a candidate pair. Returns (id_a, id_b,
+    est_jaccard) with id_a < id_b, one row per pair — the banded-pair
+    core (``_banded_pairs``: one (band, band_key) exchange, hot-bucket
+    cap at ``max_bucket_size``, first-surviving-band-wins dedup) over
+    the signature arrays. Docs without a signature (no shingles: null
+    or empty text, too few tokens) are never paired.
+
+    est_jaccard is an UNROLLED k-term coalesce-compare (null slots
+    count unequal, matching the HOF filter's null-drop) — the
+    ``zip_with`` fold ran interpreted and measured 2× slower per pair.
+    """
     est = F.round(
         sum(
             F.coalesce(
-                (F.col("sig_a").getItem(i) == F.col("sig_b").getItem(i)).cast("int"),
+                (F.col("h_a").getItem(i) == F.col("h_b").getItem(i)).cast("int"),
                 F.lit(0),
             )
             for i in range(k)
@@ -350,37 +414,12 @@ def lsh_candidate_pairs(
         / F.lit(float(k)),
         6,
     )
-    joined = a.join(b, ["band", "band_key"]).filter(F.col("id_a") < F.col("id_b"))
-    if dedup != "first_band":
-        return joined.select(
-            "id_a", "id_b", est.alias("est_jaccard")
-        ).distinct()
-
-    # first-surviving-band-wins: band keys for EARLIER bands rebuild
-    # from the sig arrays with the same concat_ws (null-skipping)
-    # expression the join key used, so the match test is exact. A
-    # bucket that was CAPPED in an earlier band emitted nothing there,
-    # so a match in it must not suppress this row — the broadcast
-    # left-join flags (__hot_<b>) encode exactly that. Only bands
-    # 0..bands-2 need flags: the chain stops at the row's own band.
-    def _key(col: str, band: int) -> Column:
-        return F.concat_ws(
-            "_", *[F.col(col).getItem(band * r + j) for j in range(r)]
-        )
-
-    for bnd in range(bands - 1):
-        hb = hot.select(F.col("__hot_tag").alias(f"__hot_{bnd}"))
-        tag = F.concat_ws("|", F.lit(str(bnd)), _key("sig_a", bnd))
-        joined = joined.join(F.broadcast(hb), tag == F.col(f"__hot_{bnd}"), "left")
-
-    chain = None
-    for bnd in range(bands):
-        m = _key("sig_a", bnd) == _key("sig_b", bnd)
-        if bnd < bands - 1:
-            m = m & F.col(f"__hot_{bnd}").isNull()
-        chain = F.when(m, F.lit(bnd)) if chain is None else chain.when(m, F.lit(bnd))
-    return joined.filter(chain == F.col("band")).select(
-        "id_a", "id_b", est.alias("est_jaccard")
+    return _banded_pairs(
+        _minhash_sig_rows(sigs, k, id_col),
+        _minhash_band_key(k, bands),
+        bands,
+        est.alias("est_jaccard"),
+        max_bucket_size,
     )
 
 
@@ -481,23 +520,11 @@ def band_simhash(
     near-dup admission operator (and their oracles), so a bits/bands
     layout change lands everywhere at once. Pure Column expressions
     (struct-array explode), streaming-transparent."""
-    width = bits // bands
-    mask = (1 << width) - 1
     return sh.select(
         id_col,
         "simhash",
         F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.shiftright(F.col("simhash"), j * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for j in range(bands)
-                ]
-            )
+            _band_structs(F.col("simhash"), _bit_slices(bits, bands), bands, "band_val")
         ).alias("bk"),
     ).select(id_col, "simhash", "bk.band", "bk.band_val")
 
@@ -911,82 +938,6 @@ def connected_components(
     ).select("id", F.coalesce("root", "id").alias("component"))
 
 
-#: Over-cap (band, band_val) keys above which the plan-literal
-#: NOT-isin formulation stops scaling (collect size on the driver,
-#: isin literal count in the plan / codegen) and the banded-Hamming
-#: paths switch to the join-based saturation fallback. 8192 64-bit
-#: keys collect in ~1 MB and codegen fine; a healthy banding (band
-#: space ≫ n_docs / cap) produces orders of magnitude fewer.
-_HOT_LITERAL_CAP = 8192
-
-
-def _drop_hot_buckets(
-    banded: DataFrame, capped_by_band: dict[int, set[int]]
-) -> DataFrame:
-    """Drop whole over-cap (band, band_val) buckets via a literal
-    JVM predicate built from the already-collected hot set — the
-    hot-bucket CAP without a second count pass: one groupBy aggregate
-    feeds both this filter and the first-band-wins chain's hot-band
-    exclusion, where the window-count formulation re-counted the
-    same keys over the full banded stream."""
-    if not capped_by_band:
-        return banded
-    drop = None
-    for j, hot in sorted(capped_by_band.items()):
-        m = (F.col("band") == j) & F.col("band_val").isin(
-            [int(x) for x in sorted(hot)]
-        )
-        drop = m if drop is None else (drop | m)
-    return banded.filter(~drop)
-
-
-def _collect_capped_buckets(
-    banded: DataFrame, max_bucket_size: int, hot_literal_cap: int
-) -> "dict[int, set[int]] | None":
-    """One aggregate pass over the banded stream; returns the over-cap
-    (band, band_val) hot set as a driver dict, or ``None`` when the
-    hot-key count exceeds ``hot_literal_cap`` — the ADVERSARIAL BAND
-    SATURATION signal (degenerate corpus or undersized band space)
-    under which collecting the set and folding it into plan literals
-    would blow the driver / the codegen'd predicate. Callers must then
-    take the join-based fallback (``_drop_hot_buckets_join`` + a
-    pair-level ``dropDuplicates``), which degrades to one extra
-    shuffle instead of failing. ``limit(cap + 1)`` bounds the collect
-    itself, so even a fully saturated band space moves at most
-    ``cap + 1`` rows to the driver."""
-    rows = (
-        banded.groupBy("band", "band_val")
-        .count()
-        .filter(F.col("count") > max_bucket_size)
-        .limit(hot_literal_cap + 1)
-        .collect()
-    )
-    if len(rows) > hot_literal_cap:
-        return None
-    capped_by_band: dict[int, set[int]] = {}
-    for row in rows:
-        capped_by_band.setdefault(int(row["band"]), set()).add(int(row["band_val"]))
-    return capped_by_band
-
-
-def _drop_hot_buckets_join(
-    banded: DataFrame, max_bucket_size: int
-) -> DataFrame:
-    """Saturation fallback for the cap filter: drop over-cap buckets
-    via a left-anti join against the recomputed hot-key aggregate —
-    never materialized on the driver, so it scales to a hot set of any
-    size (AQE broadcasts it when it is in fact small). Costs a second
-    aggregate pass over the banded stream, paid ONLY in the saturated
-    regime the literal path refuses."""
-    hot = (
-        banded.groupBy("band", "band_val")
-        .count()
-        .filter(F.col("count") > max_bucket_size)
-        .select("band", "band_val")
-    )
-    return banded.join(hot, ["band", "band_val"], "left_anti")
-
-
 def simhash_neardup_pairs(
     df: DataFrame,
     max_hamming: int = 3,
@@ -995,10 +946,9 @@ def simhash_neardup_pairs(
     max_bucket_size: int = 2000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "arrow",
-    hot_literal_cap: int = _HOT_LITERAL_CAP,
 ) -> DataFrame:
-    """SimHash near-dup pairs: (id_a < id_b, hamming ≤ ``max_hamming``).
+    """SimHash near-dup pairs: (id_a < id_b, hamming ≤ ``max_hamming``)
+    — ``simhash`` per document, then ``hash_neardup_pairs`` over it.
 
     Banded exact-match candidate generation with a PIGEONHOLE recall
     guarantee: split the ``bits``-bit hash into ``bands`` equal slices;
@@ -1008,102 +958,62 @@ def simhash_neardup_pairs(
     NOTHING, unlike the probabilistic MinHash/hyperplane paths. A
     ``max_hamming`` at or above ``bands`` is allowed — the radius
     beyond ``bands - 1`` is then probabilistic (a pair must still
-    share one exact band). One shuffle on (band, band_value); the
-    Hamming check (bit_count of xor, one long per side) runs only
-    inside buckets; hot buckets are capped like every other dedup
-    path. Past ``hot_literal_cap`` over-cap buckets (adversarial band
-    saturation) the plan-literal hot-set formulation is abandoned for
-    the join-based fallback — identical pair set, one extra shuffle.
-    """
-    width = bits // bands
-    mask = (1 << width) - 1
-    sh = simhash(df, bits, text_col, id_col, impl=impl).localCheckpoint()
-    banded = band_simhash(sh, bits=bits, bands=bands, id_col=id_col).withColumnRenamed(
-        id_col, "id"
-    )
-    # capped (hot) buckets: driver-bounded tiny in the designed regime
-    # — only buckets whose size exceeds the cap, collected so the
-    # first-band-wins predicate below can skip them exactly. None =
-    # saturated (more hot keys than plan literals can carry).
-    capped_by_band = _collect_capped_buckets(banded, max_bucket_size, hot_literal_cap)
-    if capped_by_band is None:
-        return _banded_hamming_pairs_saturated(
-            banded, "simhash", max_bucket_size, max_hamming
-        )
-    # same one-aggregate fold as hash_neardup_pairs: the collected hot
-    # set IS the cap filter — no second count window over the stream
-    banded = _drop_hot_buckets(banded, capped_by_band)
-    a = banded.select(
-        "band", "band_val", F.col("id").alias("id_a"), F.col("simhash").alias("sh_a")
-    )
-    b = banded.select(
-        "band", "band_val", F.col("id").alias("id_b"), F.col("simhash").alias("sh_b")
-    )
-
-    # FIRST-SURVIVING-BAND-WINS dedup: a pair colliding in k bands
-    # would emit k times; instead of a dropDuplicates shuffle over the
-    # full pair stream, keep the row only in the first band where both
-    # sides' slices match AND that bucket survived the cap — a pure
-    # JVM expression, because every band value derives from the two
-    # simhashes already in the row.
-    def _slice(col, j):
-        return F.shiftright(F.col(col), j * width).bitwiseAND(F.lit(mask))
-
-    first_match = F.lit(None).cast("int")
-    chain = None
-    for j in range(bands):
-        m = _slice("sh_a", j) == _slice("sh_b", j)
-        hot = capped_by_band.get(j)
-        if hot:
-            m = m & ~_slice("sh_a", j).isin([int(x) for x in hot])
-        chain = F.when(m, F.lit(j)) if chain is None else chain.when(m, F.lit(j))
-    first_match = chain
-
-    return (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(first_match == F.col("band"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    share one exact band)."""
+    return hash_neardup_pairs(
+        simhash(df, bits, text_col, id_col),
+        "simhash",
+        bits=bits,
+        bands=bands,
+        max_hamming=max_hamming,
+        max_bucket_size=max_bucket_size,
+        id_col=id_col,
     )
 
 
-def _banded_hamming_pairs_saturated(
-    banded: DataFrame, hash_name: str, max_bucket_size: int, max_hamming: int
+def hash_neardup_pairs(
+    hashed: DataFrame,
+    hash_col: str = "phash",
+    bits: int = 64,
+    bands: int = 8,
+    max_hamming: int = 4,
+    max_bucket_size: int = 2000,
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Saturated-regime banded-Hamming pairs: cap filter as an
-    anti-join (``_drop_hot_buckets_join``) and multi-band pair
-    de-duplication as a ``dropDuplicates`` over the candidate stream
-    instead of the first-surviving-band-wins literal chain. SAME pair
-    set as the literal path — a pair is emitted iff it shares at least
-    one surviving bucket, and its hamming derives from the full hashes
-    so every duplicate row is identical — at the cost of the pair-id
-    shuffle the chain exists to avoid. Only reachable when the hot-key
-    count already exceeds ``hot_literal_cap``, i.e. when the corpus or
-    banding is degenerate and graceful degradation beats a driver OOM.
-    ``banded`` must carry (band, band_val, id, <hash_name>)."""
-    banded = _drop_hot_buckets_join(banded, max_bucket_size)
-    a = banded.select(
-        "band", "band_val", F.col("id").alias("id_a"), F.col(hash_name).alias("h_a")
-    )
-    b = banded.select(
-        "band", "band_val", F.col("id").alias("id_b"), F.col(hash_name).alias("h_b")
-    )
-    return (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    """Banded-Hamming near-dup pairs over a ``bits``-bit hash column
+    (SimHash, perceptual image hashes, audio fingerprints — anything
+    hashed to one long): (id_a < id_b, hamming ≤ ``max_hamming``).
+    The banded-pair core (``_banded_pairs``) with the bit-slice band
+    key: one shuffle on (band, band_value), hot buckets over
+    ``max_bucket_size`` capped, first-surviving-band-wins instead of a
+    pair-stream distinct, Hamming = bit_count of the xor. Pigeonhole:
+    a pair within Hamming ``bands - 1`` shares at least one exact band
+    slice. Payloads never ride past the hash column.
+
+    Negative hashes (bit 63 set, stored in a signed long) band
+    correctly: arithmetic shiftright's low ``width`` bits equal the
+    logical shift's for every band, and the top band's mask strips the
+    sign extension.
+
+    Size ``bands`` so the band-value SPACE stays sparse:
+    ``2^(bits/bands)`` must be ≫ ``n_docs / max_bucket_size``, or
+    every bucket saturates at the cap and the candidate join
+    degenerates (measured at the 500k rung: 8-bit slices give 256
+    values/band, so a uniform 500k corpus averages ~1950 rows/bucket
+    — half the buckets blow the cap and the rest emit ~2000²
+    candidates each; bands=4 → 65k values/band restores sparse
+    buckets at identical recall radius 3). The sparsest safe choice
+    is ``bands = max_hamming + 1`` — the pigeonhole minimum (q94/q95
+    run 5 bands for radius 4). When ``bands`` does not divide
+    ``bits``, the top ``bits - bands*(bits//bands)`` bits are simply
+    not banded: the recall guarantee is UNAFFECTED (an uncovered
+    differing bit never consumes a clean band; pairs differing only
+    in uncovered bits collide in every band and are exact-filtered
+    like any other candidate)."""
+    rows = hashed.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
+    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming")
+    return _banded_pairs(
+        rows, _bit_slices(bits, bands), bands, hamming, max_bucket_size
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -1756,33 +1666,22 @@ def minhash_band_rows(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Slim (id, band, band_key) rows — the SAME banding convention as
-    ``lsh_candidate_pairs`` (concat_ws of r = k/bands consecutive
-    signature slots), factored out so a persisted dedup index and the
-    batch pair generator can never drift. Docs with no shingles (null
-    signatures) emit NOTHING: they have no content to collide on, and
-    dropping them keeps the join semantics identical across engines
-    (Spark's concat_ws would fold null sigs to "" while SQL string
-    concat yields NULL). Map-only — one Arrow signature pass, no
-    exchange."""
+    """Slim (id, band, band_key) rows — the SAME banding helpers as
+    ``lsh_candidate_pairs`` (``_minhash_sig_rows``,
+    ``_minhash_band_key``), so a persisted dedup index and the batch
+    pair generator can never drift. Docs with no shingles (null
+    signatures) emit NOTHING: they have no content to collide on.
+    Map-only — one Arrow signature pass, no exchange."""
     sigs = minhash_signatures(
         df, k=k, shingle_n=shingle_n, text_col=text_col, id_col=id_col
     )
-    r = k // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_", *[F.col(f"sig_{b * r + j}") for j in range(r)]
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
+    key = _minhash_band_key(k, bands)
     return (
-        sigs.filter(F.col("sig_0").isNotNull())
-        .select(F.col(id_col), F.explode(band_structs).alias("bk"))
+        _minhash_sig_rows(sigs, k, id_col)
+        .select(
+            F.col("id").alias(id_col),
+            F.explode(_band_structs(F.col("h"), key, bands, "band_key")).alias("bk"),
+        )
         .select(id_col, "bk.band", "bk.band_key")
     )
 
@@ -2453,113 +2352,4 @@ def dedup_incremental(
             .otherwise(F.lit("kept"))
             .alias("verdict"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# generic banded-Hamming pairs over a precomputed hash column (q94)
-# ---------------------------------------------------------------------------
-
-def hash_neardup_pairs(
-    hashed: DataFrame,
-    hash_col: str = "phash",
-    bits: int = 64,
-    bands: int = 8,
-    max_hamming: int = 4,
-    max_bucket_size: int = 2000,
-    id_col: str = "doc_id",
-    hot_literal_cap: int = _HOT_LITERAL_CAP,
-) -> DataFrame:
-    """``simhash_neardup_pairs``' banded-Hamming join generalized to a
-    PRECOMPUTED ``bits``-bit hash column (perceptual image hashes,
-    audio fingerprints — anything where the hash comes from a decode
-    stage, not from text). Same pigeonhole guarantee: a pair within
-    Hamming ``bands - 1`` shares at least one exact band slice; same
-    first-surviving-band-wins JVM predicate instead of a pair-stream
-    distinct; same hot-bucket cap, with the same join-based fallback
-    past ``hot_literal_cap`` over-cap buckets. One shuffle on
-    (band, band_value); payloads never ride past the hash column.
-
-    Negative hashes (bit 63 set, stored in a signed long) band
-    correctly: arithmetic shiftright's low ``width`` bits equal the
-    logical shift's for every band, and the top band's mask strips the
-    sign extension.
-
-    Size ``bands`` so the band-value SPACE stays sparse:
-    ``2^(bits/bands)`` must be ≫ ``n_docs / max_bucket_size``, or
-    every bucket saturates at the cap and the candidate join
-    degenerates (measured at the 500k rung: 8-bit slices give 256
-    values/band, so a uniform 500k corpus averages ~1950 rows/bucket
-    — half the buckets blow the cap and the rest emit ~2000²
-    candidates each; bands=4 → 65k values/band restores sparse
-    buckets at identical recall radius 3). The sparsest safe choice
-    is ``bands = max_hamming + 1`` — the pigeonhole minimum (q94/q95
-    run 5 bands for radius 4). When ``bands`` does not divide
-    ``bits``, the top ``bits - bands*(bits//bands)`` bits are simply
-    not banded: the recall guarantee is UNAFFECTED (an uncovered
-    differing bit never consumes a clean band; pairs differing only
-    in uncovered bits collide in every band and are exact-filtered
-    like any other candidate)."""
-    width = bits // bands
-    mask = (1 << width) - 1
-    sh = hashed.select(
-        F.col(id_col).alias("id"), F.col(hash_col).alias("__h")
-    ).localCheckpoint()
-    banded = sh.select(
-        "id",
-        "__h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.shiftright(F.col("__h"), j * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "__h", "bk.band", "bk.band_val")
-    # ONE aggregate pass: the collected over-cap set drives BOTH the
-    # cap filter (a literal NOT-isin predicate — no second count
-    # window over the banded stream) and the first-band-wins chain's
-    # hot-band exclusion below. Driver-bounded by the over-cap bucket
-    # count, not the corpus (r10 verdict's fold); None = saturated,
-    # take the join-based fallback instead of a driver-sized collect.
-    capped_by_band = _collect_capped_buckets(banded, max_bucket_size, hot_literal_cap)
-    if capped_by_band is None:
-        return _banded_hamming_pairs_saturated(
-            banded, "__h", max_bucket_size, max_hamming
-        )
-    banded = _drop_hot_buckets(banded, capped_by_band)
-    a = banded.select(
-        "band", "band_val", F.col("id").alias("id_a"), F.col("__h").alias("h_a")
-    )
-    b = banded.select(
-        "band", "band_val", F.col("id").alias("id_b"), F.col("__h").alias("h_b")
-    )
-
-    def _slice(col: str, j: int) -> Column:
-        return F.shiftright(F.col(col), j * width).bitwiseAND(F.lit(mask))
-
-    chain = None
-    for j in range(bands):
-        m = _slice("h_a", j) == _slice("h_b", j)
-        hot = capped_by_band.get(j)
-        if hot:
-            m = m & ~_slice("h_a", j).isin([int(x) for x in hot])
-        chain = F.when(m, F.lit(j)) if chain is None else chain.when(m, F.lit(j))
-
-    return (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(chain == F.col("band"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
     )

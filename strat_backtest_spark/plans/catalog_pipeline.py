@@ -1780,10 +1780,11 @@ def q94_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel-identical but RE-ENCODED with a different filter + zlib
     level — byte-different payloads exact dedup cannot pair), decode
     through the REAL pure-zlib PNG path, dHash the pixels, and band
-    the 64-bit hashes through the generic banded-Hamming join
+    the 64-bit hashes through the banded-Hamming join
     (operators/multimodal.perceptual_hash +
-    operators/dedup.hash_neardup_pairs). Payload bytes never shuffle —
-    only (id, long) rows ride the exchange."""
+    operators/dedup.hash_neardup_pairs, a bit-slice caller of the
+    banded-pair core that MinHash LSH shares). Payload bytes never
+    shuffle — only (id, long) rows ride the exchange."""
     import pandas as pd
 
     from strat_backtest_spark.operators.dedup import hash_neardup_pairs
@@ -1910,10 +1911,11 @@ def q95_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample values, that byte-level dedup cannot pair), decode through
     the REAL stdlib-wave path, fingerprint the envelope (amplitude-
     scale-invariant by construction), and band the 64-bit fingerprints
-    through the generic banded-Hamming join
+    through the banded-Hamming join
     (operators/multimodal.audio_fingerprint +
-    operators/dedup.hash_neardup_pairs — the same machinery as the
-    image path, proving the near-dup core is modality-agnostic).
+    operators/dedup.hash_neardup_pairs — the same banded-pair core as
+    the image, SimHash and MinHash-LSH paths, proving it is
+    modality-agnostic).
     Payload bytes never shuffle — only (id, long) rows ride the
     exchange."""
     import pandas as pd

@@ -79,12 +79,15 @@ _FAST_SUBSET = [
     "q64_stream_band_kernel",      # streaming kernel: band curve
     "q65_stream_grid",             # streaming kernel: (ticker, run_id) grid
     "q66_chunking",
+    "q68_dedup_apply",             # q56's LSH components -> anti-join
+    "q69_curation_end_to_end",     # q56's LSH components -> full chain
     "q71_stream_partial_close",    # streaming kernel: update-mode re-emission
     "q72_stoploss_networth",
     "q73_stream_late_arrival",     # streaming kernel: reorder buffer
     "q79_pack_sequences",
     "q86_ngram_topk",
     "q94_image_neardup",
+    "q95_audio_neardup",           # second hash_neardup_pairs caller
 ]
 
 

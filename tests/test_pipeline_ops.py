@@ -157,11 +157,42 @@ def test_token_count_tokenizer_injection(spark):
     assert injected == {"hello, world!": 13, "a b c": 5}
 
 
+def _any_surviving_band_pairs(hashes: dict, key, bands: int, cap: int) -> set:
+    """Brute-force banded-pair contract: (a, b) with a < b is a
+    candidate iff in SOME band both sides have the same key and that
+    (band, key) bucket holds at most ``cap`` docs."""
+    from collections import Counter
+
+    sizes = Counter((j, key(h, j)) for h in hashes.values() for j in range(bands))
+    ids = sorted(hashes)
+    return {
+        (a, b)
+        for i, a in enumerate(ids)
+        for b in ids[i + 1:]
+        if any(
+            key(hashes[a], j) == key(hashes[b], j) and sizes[(j, key(hashes[a], j))] <= cap
+            for j in range(bands)
+        )
+    }
+
+
+def _bit_slice(width: int):
+    return lambda h, j: (h >> (j * width)) & ((1 << width) - 1)
+
+
+def _hamming_reference(hashes, bits, bands, cap, max_hamming) -> dict:
+    pairs = _any_surviving_band_pairs(hashes, _bit_slice(bits // bands), bands, cap)
+    ham = {(a, b): bin(hashes[a] ^ hashes[b]).count("1") for a, b in pairs}
+    return {p: d for p, d in ham.items() if d <= max_hamming}
+
+
 def test_simhash_neardup_capped_bucket_parity(spark):
     """First-surviving-band-wins dedup must equal the any-surviving-
     band contract exactly when caps bite: with a tiny cap some band
     buckets drop, and a pair whose FIRST matching band was capped must
     still surface via a later surviving band."""
+    from collections import Counter
+
     from strat_backtest_spark.operators.dedup import simhash, simhash_neardup_pairs
 
     texts = [
@@ -175,82 +206,78 @@ def test_simhash_neardup_capped_bucket_parity(spark):
             docs, max_hamming=10, bands=4, bits=32, max_bucket_size=6
         ).collect()
     }
-    # brute-force reference: any band where both sides share a
-    # SURVIVING (<= cap) bucket
     sh = {r["doc_id"]: r["simhash"] for r in simhash(docs, 32).collect()}
-    width, mask = 8, 255
-    from collections import Counter
-    bucket_sizes = Counter()
-    for h in sh.values():
-        for j in range(4):
-            bucket_sizes[(j, (h >> (j * width)) & mask)] += 1
-    want = {}
-    ids = sorted(sh)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            ok = any(
-                ((sh[a] >> (j * width)) & mask) == ((sh[b] >> (j * width)) & mask)
-                and bucket_sizes[(j, (sh[a] >> (j * width)) & mask)] <= 6
-                for j in range(4)
-            )
-            ham = bin(sh[a] ^ sh[b]).count("1")
-            if ok and ham <= 10:
-                want[(a, b)] = ham
-    assert any(bucket_sizes[k] > 6 for k in bucket_sizes), "cap never bit; weak test"
-    assert got == want
+    bucket_sizes = Counter((j, (h >> (j * 8)) & 255) for h in sh.values() for j in range(4))
+    assert any(n > 6 for n in bucket_sizes.values()), "cap never bit; weak test"
+    assert got == _hamming_reference(sh, 32, 4, 6, 10)
 
 
 def test_banded_hamming_saturation_fallback_parity(spark):
-    """Adversarial band saturation (more over-cap buckets than
-    ``hot_literal_cap`` plan literals) must flip both banded-Hamming
-    paths to the join-based fallback with an IDENTICAL pair set —
-    same corpus, ``hot_literal_cap=0`` forces the fallback while the
-    default takes the literal chain; dicts (pair -> hamming) must be
-    equal, and the fixture must actually have hot buckets so the
-    forced run exercises the anti-join cap too."""
+    """A SATURATED band space — every bucket over the cap except the
+    ones holding the planted pairs — must still yield exactly the
+    any-surviving-band pairs on both banded-Hamming entry points (text
+    through ``simhash_neardup_pairs``, precomputed longs through
+    ``hash_neardup_pairs``). The planted long pairs collide in hot
+    bands 0-3 first, so they surface only if those capped buckets do
+    not suppress their surviving band 4."""
+    from collections import Counter
+
     from strat_backtest_spark.operators.dedup import (
         hash_neardup_pairs,
+        simhash,
         simhash_neardup_pairs,
     )
 
-    texts = [
-        (
-            f"d{i:02d}",
-            "common shared words everywhere "
-            + ("alpha" if i % 2 else "beta") * (i % 5 + 1),
-        )
-        for i in range(30)
-    ]
-    docs = spark.createDataFrame(texts, "doc_id string, text string")
+    def saturated(hashes, planted, bits, bands, cap):
+        key = _bit_slice(bits // bands)
+        sizes = Counter((j, key(h, j)) for h in hashes.values() for j in range(bands))
+        for i, h in hashes.items():
+            if i not in planted:
+                assert all(sizes[(j, key(h, j))] > cap for j in range(bands)), i
+
+    # text: four filler texts repeated past the cap, plus planted
+    # near-identical pairs
+    filler = ["alpha beta gamma delta", "epsilon zeta eta theta",
+              "iota kappa lambda mu", "nu xi omicron pi"]
+    texts = [(f"f{i:02d}", filler[i % 4]) for i in range(40)]
+    planted = {}
+    for p in range(3):
+        base = f"planted story {p} about rivers and mountains and {p * 7} lakes"
+        planted[f"p{p}a"] = base
+        planted[f"p{p}b"] = base + " today"
+    docs = spark.createDataFrame(texts + sorted(planted.items()), "doc_id string, text string")
     kw = dict(max_hamming=10, bands=4, bits=32, max_bucket_size=6)
-    literal = {
+    sh = {r["doc_id"]: r["simhash"] for r in simhash(docs, 32).collect()}
+    saturated(sh, planted, 32, 4, 6)
+    want = _hamming_reference(sh, 32, 4, 6, 10)
+    assert want, "no pairs at all; weak fixture"
+    got = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in simhash_neardup_pairs(docs, **kw).collect()
     }
-    saturated = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_neardup_pairs(docs, hot_literal_cap=0, **kw).collect()
-    }
-    assert literal, "no pairs at all; weak fixture"
-    assert saturated == literal
+    assert got == want
 
-    # generic precomputed-hash path: clustered longs so buckets both
-    # collide (pairs exist) and blow the tiny cap (anti-join bites)
-    hashed = spark.createDataFrame(
-        [(f"h{i:02d}", (i % 3) * 0x0101010101 + (i // 3)) for i in range(24)],
-        "doc_id string, phash long",
-    )
-    hkw = dict(hash_col="phash", bits=40, bands=5, max_hamming=6, max_bucket_size=3)
-    h_literal = {
+    # precomputed longs: the five 8-bit bands take one of two hot
+    # values each; a planted pair shares the hot values of bands 0-3
+    # and a private band-4 value, and differs in one unbanded bit
+    rows = [(f"h{i:02d}", (i % 2) * 0x0101010101) for i in range(20)]
+    rows += [
+        (f"q{p}{s}", (p % 2) * 0x01010101 | ((0x40 + p) << 32) | (s << 45))
+        for p in range(3)
+        for s in (0, 1)
+    ]
+    hashed = spark.createDataFrame(rows, "doc_id string, phash long")
+    hashes = dict(rows)
+    saturated(hashes, {i for i, _ in rows if i.startswith("q")}, 40, 5, 3)
+    h_want = _hamming_reference(hashes, 40, 5, 3, 6)
+    assert h_want == {(f"q{p}0", f"q{p}1"): 1 for p in range(3)}
+    h_got = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in hash_neardup_pairs(hashed, **hkw).collect()
+        for r in hash_neardup_pairs(
+            hashed, hash_col="phash", bits=40, bands=5, max_hamming=6, max_bucket_size=3
+        ).collect()
     }
-    h_saturated = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in hash_neardup_pairs(hashed, hot_literal_cap=0, **hkw).collect()
-    }
-    assert h_literal, "no pairs on the precomputed-hash path; weak fixture"
-    assert h_saturated == h_literal
+    assert h_got == h_want
 
 
 def test_minhash_arrow_jvm_parity(spark):
@@ -341,8 +368,8 @@ def test_lsh_first_band_wins_respects_capped_earlier_band(spark):
     """first_band dedup must NOT treat a match in a CAPPED earlier
     band as 'already emitted' — that band emitted nothing. Docs 0/1
     collide in band 0 (hot, 30 members > cap 10) AND in band 1 (just
-    the two of them): the pair must surface via band 1. Also pins
-    first_band == distinct on the same input."""
+    the two of them): the pair must surface via band 1. Also pins the
+    result to the brute-force any-surviving-band reference."""
     from strat_backtest_spark.operators.dedup import lsh_candidate_pairs
 
     rows = []
@@ -359,10 +386,38 @@ def test_lsh_first_band_wins_respects_capped_earlier_band(spark):
     assert [(r.id_a, r.id_b) for r in got] == [(0, 1)]
     # 4/8 slots equal (the global sig_0/sig_1 plus shared sig_2/sig_3)
     assert abs(got[0].est_jaccard - 0.5) < 1e-12
-    ref = lsh_candidate_pairs(
-        sigs, k=8, bands=4, max_bucket_size=10, dedup="distinct"
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
+    sig = {r[0]: r[1:] for r in rows}
+    ref = _any_surviving_band_pairs(sig, lambda s, b: s[2 * b:2 * b + 2], 4, 10)
+    ref = {
+        (a, b, round(sum(x == y for x, y in zip(sig[a], sig[b])) / 8, 6))
+        for a, b in ref
+    }
+    assert sorted(map(tuple, got)) == sorted(ref)
+
+
+def test_lsh_never_pairs_docs_without_signature(spark):
+    """Docs with no shingles (fewer than 3 tokens, null or empty text)
+    have all-null signatures. They must yield no candidate pair and no
+    component: null-skipping band keys would put them all in the ""
+    bucket of every band, pairing each with each at est_jaccard 0.0,
+    while the DuckDB oracle's NULL band key never joins."""
+    from strat_backtest_spark.operators.dedup import (
+        connected_components,
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+
+    story = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame(
+        [(1, "one two"), (2, "hello"), (3, None), (4, ""),
+         (5, story), (6, story + " today")],
+        "doc_id long, text string",
+    )
+    pairs = lsh_candidate_pairs(minhash_signatures(docs, k=8), k=8, bands=4)
+    got = sorted((r.id_a, r.id_b) for r in pairs.collect())
+    assert got == [(5, 6)]
+    comps = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
+    assert comps == {5: 5, 6: 5}
 
 
 def test_fingerprint_arrow_jvm_parity(spark):
